@@ -18,13 +18,18 @@ from shared_solar_data_warehouse_spark.registry import op
 from shared_solar_data_warehouse_spark.sources.io import register_views
 
 # Q1: pricing summary report — full-table agg with computed measures.
+# Each exact decimal sum rounds to 4 places AS A DECIMAL, then casts:
+# round(double, 4) splits the engines when the sum ends exactly on a
+# half step (Spark rounds the shortest decimal string half-up, DuckDB
+# rounds x*1e4 in binary), as a generated snapshot's charge sum of
+# 283778228.83495000 did.  Decimal round is half-up in both engines.
 _Q1_BODY = """
 SELECT l_returnflag,
        l_linestatus,
-       round(CAST(sum(CAST(l_quantity AS DECIMAL(25,8))) AS DOUBLE), 4) AS sum_qty,
-       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(25,8))) AS DOUBLE), 4) AS sum_base_price,
-       round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(25,8))) AS DOUBLE), 4) AS sum_disc_price,
-       round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(25,8))) AS DOUBLE), 4) AS sum_charge,
+       CAST(round(sum(CAST(l_quantity AS DECIMAL(25,8))), 4) AS DOUBLE) AS sum_qty,
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(25,8))), 4) AS DOUBLE) AS sum_base_price,
+       CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(25,8))), 4) AS DOUBLE) AS sum_disc_price,
+       CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(25,8))), 4) AS DOUBLE) AS sum_charge,
        count(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'

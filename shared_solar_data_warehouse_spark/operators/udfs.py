@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from shared_solar_data_warehouse_spark.parity import DEC
 from shared_solar_data_warehouse_spark.registry import op
 from shared_solar_data_warehouse_spark.sources.io import load_table
 
@@ -79,23 +80,30 @@ def udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def udf_pandas_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPED_AGG pandas_udf: custom Python aggregates fed one group
-    at a time as pandas Series.  The mean uses math.fsum (correctly-
-    rounded, order-independent — matching the oracle's exact decimal
-    sum) and floor-based rounding (parity.davg's rule for quotients)."""
+    at a time as pandas Series.  The mean sums ``value`` cast to
+    ``parity.DEC`` exactly, as the oracle does, then divides as a double
+    and rounds with parity.davg's floor rule.  The span uses the same
+    floor rule, which for a non-negative value equals DuckDB's
+    round(x, 4) (std::round of x*1e4); Python's round() is half-even on
+    the exact binary value and differs at ties."""
+    import decimal
     import math
 
     @pandas_udf("double")
     def mean4(v: pd.Series) -> float:
-        mean = math.fsum(v) / len(v)
-        return math.floor(mean * 10000.0 + 0.5) / 10000.0
+        with decimal.localcontext() as ctx:
+            ctx.prec = 38  # DECIMAL(38,8) sum headroom: no digit is lost
+            total = sum(v, decimal.Decimal(0))
+        return math.floor(float(total) / len(v) * 10000.0 + 0.5) / 10000.0
 
     @pandas_udf("double")
     def span4(v: pd.Series) -> float:
-        return round(float(v.max() - v.min()), 4)
+        return math.floor(float(v.max() - v.min()) * 10000.0 + 0.5) / 10000.0
 
     e = load_table(spark, sf_dir, "events")
     return e.groupBy("user_id").agg(
-        mean4("value").alias("mean_value"), span4("value").alias("value_span")
+        mean4(F.col("value").cast(DEC)).alias("mean_value"),
+        span4("value").alias("value_span"),
     )
 
 

@@ -204,33 +204,20 @@ def _bench_cost() -> dict[str, float]:
         return {}
 
 
-#: Ops to confirm FIRST in the next driver round: ops edited this
-#: round (their old green rows are fingerprint-invalidated), then
-#: high-risk never-sampled families.  Prune entries once they turn
-#: driver-green.  Round 8 composes the full 50-row sample window
-#: explicitly (the driver checks the first 50 rows of queries()).
-#: Round-11 window, RECOMPOSED AT ROUND CLOSE (the optimization round
-#: edited op sources, so the "pure maintenance rotation" composed at
-#: round start no longer held): 36 MANDATORY stale re-verifies — every
-#: driver-green op whose fingerprint changed under this round's
-#: optimization edits (the r11 slow-band/dedup/ts/stream/text work,
-#: the second-session aggregate-spread batch, and the third-session
-#: text-explode-spread + sink-payload-narrowing batch, including
-#: docstring-only touches: the fingerprint keys on source text) — then
-#: 14 `--fill-oldest` depth picks from green rounds
-#: [2, 3], headed by the two predicted r02 stragglers `agg_first_last`
-#: and `fn_bitwise`, oldest-round-first with cheapest-first tie-break
-#: per the r11-close BENCH.json (refreshed BEFORE this recomposition —
-#: the r10 order trap: a new BENCH.json shifts the tie-breaks, so the
-#: window is always composed against the record the round closes
-#: with).  This tuple is the VERBATIM output of `python
-#: tools/compose_window.py --window 50 --fill-oldest` at r11 close
-#: HEAD.  Expected state after the r11 driver round lands: every
-#: optimization-touched op re-greens (the hash-identity proof for the
-#: round's restructurings), the r02 rows refresh, and the four
-#: rows-only ops (`row_sample` r01, `fn_hash_spark` r02, `fn_nondet`
-#: r05, `source_rate_stream` r08) remain deliberately unrotated by
-#: --fill-oldest since a re-sample adds no hash evidence.
+#: Ops to confirm FIRST in the next driver round (the driver checks the
+#: first 50 rows of queries()).  The head is MANDATORY: every
+#: driver-green op whose source fingerprint changed since its green
+#: round (tests/test_registry_rotation.py fails while one is missing).
+#: Here those are the r12 optimization edits (graph memo tables,
+#: interval overlap, PCA centering, stream joins/dedup) and the two
+#: generated-snapshot parity fixes, sql_tpch_q1 (decimal round before
+#: the double cast) and udf_pandas_grouped_agg (exact decimal mean).
+#: The tail is the rest of the r12 window: valid-green ops sampled
+#: again for depth.  An edit that makes another op stale swaps it in
+#: for the last tail entry instead of recomposing, so the tuple is not
+#: the verbatim output of ``tools/compose_window.py --window 50
+#: --fill-oldest``, which prints the difference.  The four oracle-less
+#: rows-only ops stay out: a re-sample adds no hash evidence.
 _FRONTLOAD: tuple[str, ...] = (
     "graph_assortativity",
     "graph_connected_components",
@@ -241,6 +228,8 @@ _FRONTLOAD: tuple[str, ...] = (
     "sim_pca_power_iteration",
     "stream_dedup",
     "stream_stream_join",
+    "sql_tpch_q1",
+    "udf_pandas_grouped_agg",
     "win_ntile",
     "scan_text",
     "udf_pandas_iter",
@@ -280,8 +269,6 @@ _FRONTLOAD: tuple[str, ...] = (
     "text_chunk_windows",
     "fn_penny_allocation",
     "text_dataset_mixture",
-    "etl_partition_skew_audit",
-    "sample_weighted",
 )
 
 

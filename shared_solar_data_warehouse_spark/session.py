@@ -6,6 +6,12 @@ defensively: these are runtime SQL confs, safe to set on a live session,
 and they are what makes results hash-comparable against the DuckDB
 oracle (UTC timestamps) and fast on local[N] (AQE, small shuffle
 partition count for small SFs).
+
+Static confs — the codegen cache size among them — are fixed when the
+JVM's SparkContext starts, so they apply only to sessions that
+``get_session`` builds (``bench.py``, the tests, ``perfbench``).  A
+session the harness passes in keeps whatever its operator chose;
+``pin_session`` cannot change that and does not try.
 """
 
 from __future__ import annotations
@@ -13,6 +19,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: Spark's codegen cache (``spark.sql.codegen.cache.maxEntries``, a static
+#: conf) holds 100 generated classes by default, fewer than the engine's
+#: working set: warm panels would recompile (Janino), and the JIT would
+#: re-optimize every new class.  Measured with an oversized cache and
+#: ``CodegenMetrics``: one sf0.01 mirror pass over all 375 ops compiles
+#: 3246 distinct classes (a second pass in the same session, 88).  The
+#: cache holds one whole pass, rounded up.
+CODEGEN_CACHE_ENTRIES = 4000
 
 #: Runtime confs safe to apply to an existing session.
 _RUNTIME_CONFS = {
@@ -82,6 +97,7 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Python workers inherit the driver env in local mode, but pin it
         # explicitly for cluster deployments too: numpy's THP madvise
         # causes direct-compaction stalls on fragmented hosts (see

@@ -55,13 +55,17 @@ def _stream_dir(sf_dir: str) -> str:
     directly (the source lists its part files; a symlinked directory
     would NOT be traversed).  The driver fixtures are single parquet
     FILES, so those get staged into a per-sf scratch dir via symlink
-    (no copy)."""
-    p = table_path(sf_dir, "events")
+    (no copy).  The scratch dir is keyed by the snapshot's basename, so
+    a link left by another snapshot of the same basename — or one whose
+    target was deleted (dangling) — is re-pointed, never trusted."""
+    p = os.path.abspath(table_path(sf_dir, "events"))
     if os.path.isdir(p):
         return p
     d = scratch_dir(sf_dir, "events_stream_src")
     link = os.path.join(d, "events.parquet")
-    if not os.path.exists(link):
+    if os.path.lexists(link) and os.readlink(link) != p:
+        os.remove(link)
+    if not os.path.lexists(link):
         os.symlink(p, link)
     return d
 

@@ -665,3 +665,58 @@ def test_swap_helpers_all_crash_prefixes(tmp_path):
     os.makedirs(base)
     cur = _recover_state_swap(base)
     assert not os.path.exists(cur) and _state_epoch(cur) == -1
+
+
+def _stage_snapshot(root, n_rows: int | None = None) -> str:
+    """A snapshot dir holding only an events FILE (the fixture's, or its
+    first ``n_rows`` rows) — what ``_stream_dir`` stages by symlink."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(root)
+    table = pq.read_table(os.path.join(SF_SMALL, "events.parquet"))
+    if n_rows is not None:
+        table = table.slice(0, n_rows)
+    pq.write_table(table, os.path.join(root, "events.parquet"))
+    return str(root)
+
+
+def test_stream_dir_repoints_reused_basename(spark, tmp_path):
+    """Two snapshots with one basename under different parents share a
+    scratch link; the second must stream ITS events, not the first's."""
+    from shared_solar_data_warehouse_spark.streaming.streams import (
+        _stream_dir,
+        drain,
+        events_stream,
+    )
+
+    base = f"sswh_stream_dir_reuse_{os.getpid()}"
+    first = _stage_snapshot(tmp_path / "a" / base)
+    second = _stage_snapshot(tmp_path / "b" / base, n_rows=100)
+    staged = _stream_dir(first)
+    try:
+        link = os.path.join(staged, "events.parquet")
+        assert os.readlink(link) == os.path.join(first, "events.parquet")
+        assert _stream_dir(second) == staged
+        assert os.readlink(link) == os.path.join(second, "events.parquet")
+        assert drain(spark, events_stream(spark, second)).count() == 100
+    finally:
+        shutil.rmtree(os.path.dirname(staged), ignore_errors=True)
+
+
+def test_stream_dir_replaces_dangling_link(tmp_path):
+    """A link whose snapshot was deleted is dangling: ``os.path.exists``
+    calls it absent, so a plain re-link would raise FileExistsError."""
+    from shared_solar_data_warehouse_spark.streaming.streams import _stream_dir
+
+    base = f"sswh_stream_dir_dangling_{os.getpid()}"
+    gone = _stage_snapshot(tmp_path / "a" / base)
+    staged = _stream_dir(gone)
+    try:
+        shutil.rmtree(gone)
+        link = os.path.join(staged, "events.parquet")
+        assert os.path.islink(link) and not os.path.exists(link)
+        fresh = _stage_snapshot(tmp_path / "b" / base)
+        assert _stream_dir(fresh) == staged
+        assert os.readlink(link) == os.path.join(fresh, "events.parquet")
+    finally:
+        shutil.rmtree(os.path.dirname(staged), ignore_errors=True)
