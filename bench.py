@@ -139,7 +139,7 @@ def main() -> int:
         out["steady_failures"] = steady_failures
 
     # Persist the full per-query record next to this script (committed
-    # as BENCH.json — also feeds registry.driver_order's cost hints).
+    # as BENCH.json).
     # SPARK_GRAFT_BENCH_OUT redirects the record (A/B windows must not
     # clobber the committed one — the r10 session lost its best window's
     # full per-query map exactly this way).  An explicit redirect is
@@ -159,11 +159,10 @@ def main() -> int:
         os.path.realpath(out_path) == os.path.realpath(committed_path)
     )
     redirect_failed = False
-    # VERDICT r11 item 2: the committed BENCH.json feeds
-    # registry._bench_cost() window tie-breaks and the next round's
-    # narrative, and it must stay a like-for-like 32-core record — the
-    # r11 close record was silently clobbered first by a snapshot from
-    # the round's worst host window and then by the driver's 8-core
+    # VERDICT r11 item 2: the committed BENCH.json must stay a
+    # like-for-like 32-core record — the r11 close record was silently
+    # clobbered first by a snapshot from the round's worst host window
+    # and then by the driver's 8-core
     # scaling run (bench.py wrote the committed path by default).  A
     # full run whose core count differs from the committed record's is
     # a scaling/diagnostic run: refuse to overwrite unless the caller

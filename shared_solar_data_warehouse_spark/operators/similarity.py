@@ -1425,26 +1425,32 @@ def _pca_iter_sql(vin: str, pout: str, sname: str, pn: str, wname: str,
                   tname: str, vout: str) -> str:
     """One unrolled DuckDB power-iteration step: project rows onto v,
     renormalize to 1e6 integer scale, fold back to a dimension vector,
-    renormalize again."""
+    renormalize again.  Every CTE of the oracle is MATERIALIZED: DuckDB
+    1.0 inlines a CTE referenced more than once, so each doubly
+    referenced step would re-evaluate its whole chain (2^depth)."""
     return f"""
-    {pout} AS (
+    {pout} AS MATERIALIZED (
         SELECT d.vec_id, CAST(sum(d.xc * v.v) AS BIGINT) AS p
         FROM dims d JOIN {vin} v ON d.pos = v.pos
         GROUP BY d.vec_id
     ),
-    {sname} AS (SELECT CAST(max(abs(p)) AS BIGINT) AS s FROM {pout}),
-    {pn} AS (
+    {sname} AS MATERIALIZED (
+        SELECT CAST(max(abs(p)) AS BIGINT) AS s FROM {pout}
+    ),
+    {pn} AS MATERIALIZED (
         SELECT p.vec_id,
                CAST(p.p // ((s.s + 999999) // 1000000) AS BIGINT) AS pq
         FROM {pout} p CROSS JOIN {sname} s
     ),
-    {wname} AS (
+    {wname} AS MATERIALIZED (
         SELECT d.pos, CAST(sum(d.xc * p.pq) AS BIGINT) AS w
         FROM dims d JOIN {pn} p ON d.vec_id = p.vec_id
         GROUP BY d.pos
     ),
-    {tname} AS (SELECT CAST(max(abs(w)) AS BIGINT) AS s FROM {wname}),
-    {vout} AS (
+    {tname} AS MATERIALIZED (
+        SELECT CAST(max(abs(w)) AS BIGINT) AS s FROM {wname}
+    ),
+    {vout} AS MATERIALIZED (
         SELECT w.pos,
                CAST(w.w // ((t.s + 999999) // 1000000) AS BIGINT) AS v
         FROM {wname} w CROSS JOIN {tname} t
@@ -1454,27 +1460,27 @@ def _pca_iter_sql(vin: str, pout: str, sname: str, pn: str, wname: str,
 @op(
     "sim_pca_power_iteration",
     oracle=f"""
-    WITH raw AS (
+    WITH raw AS MATERIALIZED (
         SELECT vec_id,
                CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS pos,
                CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1e6 + 0.5)
                     AS BIGINT) AS xq
         FROM embeddings
     ),
-    ctr AS (
+    ctr AS MATERIALIZED (
         SELECT pos, CAST(sum(xq) AS BIGINT) // count(*) AS cq
         FROM raw GROUP BY pos
     ),
-    dims AS (
+    dims AS MATERIALIZED (
         SELECT r.vec_id, r.pos, CAST(r.xq - c.cq AS BIGINT) AS xc
         FROM raw r JOIN ctr c ON r.pos = c.pos
     ),
-    v0 AS (SELECT DISTINCT pos, CAST(1 AS BIGINT) AS v FROM dims),
+    v0 AS MATERIALIZED (SELECT DISTINCT pos, CAST(1 AS BIGINT) AS v FROM dims),
     {_pca_iter_sql("v0", "p1", "s1", "q1", "w1", "t1", "v1")},
     {_pca_iter_sql("v1", "p2", "s2", "q2", "w2", "t2", "v2")},
     {_pca_iter_sql("v2", "p3", "s3", "q3", "w3", "t3", "v3")},
     {_pca_iter_sql("v3", "p4", "s4", "q4", "w4", "t4", "v4")},
-    anchor AS (
+    anchor AS MATERIALIZED (
         SELECT CASE WHEN v < 0 THEN -1 ELSE 1 END AS flip
         FROM v4 ORDER BY abs(v) DESC, pos ASC LIMIT 1
     )

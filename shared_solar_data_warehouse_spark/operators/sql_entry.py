@@ -512,12 +512,6 @@ FROM chain GROUP BY depth
 
 def _recursive_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, *_TABLES_NEEDED)
-    # The recursion produces n_customers x ~log2(keyspace) rows; Spark
-    # guards runaway recursion at 1M rows by default, which a ~100k+
-    # customer dimension legitimately exceeds (hit at the x10 scale
-    # smoke).  Raising the guard is the documented knob — the depth
-    # limit (cteRecursionLevelLimit=100) still bounds the loop.
-    spark.conf.set("spark.sql.cteRecursionRowLimit", str(200_000_000))
     return spark.sql(_RECURSIVE_BODY)
 
 

@@ -40,6 +40,12 @@ _RUNTIME_CONFS = {
     # Arrow for every pandas interop path (pandas_udf, applyInPandas,
     # toPandas) — columnar batch transfer instead of pickled rows.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # sql_recursive_cte produces n_customers x ~log2(keyspace) rows;
+    # Spark guards runaway recursion at 1M rows by default, which a
+    # ~100k+ customer dimension legitimately exceeds (hit at the x10
+    # scale smoke).  Raising the guard is the documented knob — the
+    # depth limit (cteRecursionLevelLimit=100) still bounds the loop.
+    "spark.sql.cteRecursionRowLimit": str(200_000_000),
 }
 
 

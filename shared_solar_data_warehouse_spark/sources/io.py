@@ -12,6 +12,7 @@ engine paths (full-data extra pass + nondeterministic typing).
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -108,10 +109,16 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
             _VIEW_STATE[(app, name)] = sf_dir
 
 
+def scratch_root() -> str:
+    """Root of every scratch tree the engine writes: under the process
+    temp dir (``TMPDIR``), so a caller relocates it without an option."""
+    return os.path.join(tempfile.gettempdir(), "sswh_spark_scratch")
+
+
 def scratch_dir(sf_dir: str, op_name: str) -> str:
     """Deterministic per-(sf, op) scratch path for sink/ingest round-trips."""
     base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = os.path.join("/tmp", "sswh_spark_scratch", base, op_name)
+    path = os.path.join(scratch_root(), base, op_name)
     os.makedirs(path, exist_ok=True)
     return path
 
@@ -366,10 +373,8 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     db = "sswh_bucketed"
     li_tbl = f"{db}.lineitem_b_{sf_key}"
     o_tbl = f"{db}.orders_b_{sf_key}"
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS {db} "
-        "LOCATION '/tmp/sswh_spark_scratch/bucketed_db'"
-    )
+    db_dir = os.path.join(scratch_root(), "bucketed_db")
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{db_dir}'")
     catalog = spark.catalog
     if not catalog.tableExists(li_tbl):
         load_table(spark, sf_dir, "lineitem").select(
@@ -814,11 +819,11 @@ def source_calendar_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition overwrite — the daily-batch idiom: land the
     day-partitioned fact once, then re-land ONLY 2024-01-15 (filtered
-    to value > 50 so the replacement is observable) with
-    ``partitionOverwriteMode=dynamic``, which rewrites exactly the
-    partitions present in the incoming batch and leaves every other
-    day's files untouched (static mode would have truncated the
-    whole table first).  The read-back census proves the merge: all
+    to value > 50 so the replacement is observable) with the per-write
+    option ``partitionOverwriteMode=dynamic`` (the session conf is left
+    alone), which rewrites exactly the partitions present in the
+    incoming batch and leaves every other day's files untouched (static
+    mode would have truncated the whole table first).  The read-back census proves the merge: all
     other days intact, the re-landed day replaced.  This is the
     incremental-backfill primitive for any partitioned lake table
     when the format is plain parquet (Delta/Iceberg MERGE supersedes
@@ -834,15 +839,12 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value", F.to_date("ts").alias("d")
     )
     ev.write.partitionBy("d").mode("overwrite").parquet(path)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        ev.filter(
-            (F.col("d") == F.lit("2024-01-15").cast("date"))
-            & (F.col("value") > 50.0)
-        ).write.partitionBy("d").mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    ev.filter(
+        (F.col("d") == F.lit("2024-01-15").cast("date"))
+        & (F.col("value") > 50.0)
+    ).write.partitionBy("d").mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)
     back = spark.read.parquet(path)
     return back.groupBy("d").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),

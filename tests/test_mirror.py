@@ -45,13 +45,16 @@ def test_entry_smoke(spark):
 
 
 def test_every_query_has_contract_shape(registry):
-    """queries()/oracle_sql() derive cleanly; oracle keys ⊆ query keys."""
+    """queries()/oracle_sql() derive cleanly in sorted registry order;
+    oracle keys ⊆ query keys."""
     import __spark_entry__ as entry_mod
 
     q = entry_mod.queries()
     o = entry_mod.oracle_sql()
     assert set(o) <= set(q)
     assert len(q) == len(registry)
+    assert list(q) == sorted(registry)
+    assert list(o) == [n for n in sorted(registry) if registry[n].oracle is not None]
     # rows-only ops are the documented minority
     assert len(o) >= 0.75 * len(q)
 

@@ -1,9 +1,17 @@
-"""Session construction: the codegen cache is sized to the engine's
-working set, so warm panels run from cached generated classes."""
+"""Session construction and session state: the codegen cache is sized
+to the engine's working set, so warm panels run from cached generated
+classes; builders leave the session's confs as they found them; and
+scratch trees root at the process temp dir."""
 
 from __future__ import annotations
 
-from shared_solar_data_warehouse_spark.session import CODEGEN_CACHE_ENTRIES
+import os
+import tempfile
+
+from shared_solar_data_warehouse_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
+    pin_session,
+)
 from tests.conftest import SF_SMALL
 
 #: Sixteen read-only dashboard panels.  Together they generate ~130
@@ -50,3 +58,31 @@ def test_warm_panels_do_not_recompile(spark, registry):
     warm = compiles()
     run_panels()
     assert compiles() == warm
+
+
+def test_builders_leave_session_confs_unchanged(spark, registry):
+    """The partitioned sink overwrites one partition through a per-write
+    option and the recursive CTE's row guard is a pinned runtime conf,
+    so neither builder changes a conf of the session it runs on, even
+    one where neither key was set before (as a harness passes it)."""
+    for key in (
+        "spark.sql.sources.partitionOverwriteMode",
+        "spark.sql.cteRecursionRowLimit",
+    ):
+        spark.conf.unset(key)
+    pin_session(spark)
+    before = spark.conf.getAll
+    for name in ("sink_parquet_partitioned", "sql_recursive_cte"):
+        assert registry[name].builder(spark, SF_SMALL).collect()
+    assert spark.conf.getAll == before
+
+
+def test_scratch_dir_roots_at_the_temp_dir(monkeypatch, tmp_path):
+    from shared_solar_data_warehouse_spark.sources.io import scratch_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    path = scratch_dir("/data/sf0.001/", "sink_csv")
+    assert path == os.path.join(
+        str(tmp_path), "sswh_spark_scratch", "sf0.001", "sink_csv"
+    )
+    assert os.path.isdir(path)

@@ -1,20 +1,9 @@
-"""Round-8 (ADVICE r7): behavior pins for the round-maintenance tools.
+"""Behavior pins for tools/mirror_nobroadcast.py, the broadcast-off
+oracle mirror: it must exit nonzero on any FAILING row and on a drift
+from the expected PASS / ROWS_ONLY counts, not merely on failures.
 
-`tools/compose_window.py` composes the driver's 50-row sample window —
-a silent mistake there wastes an entire round's correctness evidence,
-so its three failure modes called out by the reviewer are pinned here:
-
-1. a stale re-verify set larger than the window must FAIL LOUDLY
-   (every stale op is mandatory; silently truncating drops required
-   re-verifies);
-2. green names that no longer exist in REGISTRY (removed/renamed ops)
-   must not be proposed into the window as phantom re-verifies;
-3. duplicate `_FRONTLOAD` entries must warn even when set membership
-   matches the proposal (set() collapses them, so the 'window matches'
-   path was exactly where they went unflagged).
-
-The tool reads the live registry inside main(), so the tests
-monkeypatch the registry module's accessors and capture stdout.
+The tool builds its session and runs the mirror inside main(), so the
+tests monkeypatch those engine entry points and check the exit code.
 """
 
 from __future__ import annotations
@@ -23,244 +12,6 @@ import importlib
 import sys
 
 import pytest
-
-
-@pytest.fixture()
-def compose(monkeypatch):
-    """Import tools/compose_window.py fresh and patch the registry
-    accessors it pulls inside main()."""
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    monkeypatch.syspath_prepend(os.path.join(repo, "tools"))
-    mod = importlib.import_module("compose_window")
-
-    import shared_solar_data_warehouse_spark.registry as reg
-
-    def patch(
-        registry_names,
-        green,
-        covered,
-        frontload,
-        cost=None,
-    ):
-        monkeypatch.setattr(reg, "REGISTRY", {n: None for n in registry_names})
-        monkeypatch.setattr(reg, "driver_green", lambda: set(green))
-        monkeypatch.setattr(reg, "driver_covered", lambda: set(covered))
-        monkeypatch.setattr(reg, "_bench_cost", lambda: dict(cost or {}))
-        monkeypatch.setattr(reg, "_FRONTLOAD", tuple(frontload))
-        monkeypatch.setattr(reg, "load_all_ops", lambda: None)
-        monkeypatch.setattr(
-            reg,
-            "driver_order",
-            lambda: list(frontload)
-            + [n for n in registry_names if n not in frontload],
-        )
-
-    return mod, patch
-
-
-def _run(mod, monkeypatch, capsys, window):
-    monkeypatch.setattr(sys, "argv", ["compose_window.py", "--window", str(window)])
-    rc = mod.main()
-    out = capsys.readouterr()
-    return rc, out.out, out.err
-
-
-def test_stale_overflow_exits_nonzero(compose, monkeypatch, capsys):
-    mod, patch = compose
-    # 3 green-but-stale ops (green, not covered) but a window of 2:
-    # one MANDATORY re-verify would be silently dropped without the guard.
-    patch(
-        registry_names=["a", "b", "c", "d"],
-        green=["a", "b", "c"],
-        covered=[],
-        frontload=["a", "b"],
-    )
-    rc, out, err = _run(mod, monkeypatch, capsys, window=2)
-    assert rc == 1
-    assert "mandatory stale" in err and "1 dropped" in err
-    assert "['c']" in err  # names the dropped re-verifies
-
-
-def test_phantom_green_names_filtered(compose, monkeypatch, capsys):
-    mod, patch = compose
-    # 'ghost' is green in an old CORRECTNESS round but was removed from
-    # REGISTRY; it must be reported and excluded, not proposed.
-    patch(
-        registry_names=["a", "b"],
-        green=["a", "ghost"],
-        covered=[],
-        frontload=["a", "b"],
-    )
-    rc, out, err = _run(mod, monkeypatch, capsys, window=2)
-    assert rc == 0
-    assert "ghost" in out and "no longer in REGISTRY" in out
-    # proposed window = stale ['a'] + never ['b']; no phantom anywhere
-    assert '"ghost"' not in out
-    assert '"a"' in out and '"b"' in out
-
-
-def test_duplicate_frontload_warns_even_when_window_matches(
-    compose, monkeypatch, capsys
-):
-    mod, patch = compose
-    # _FRONTLOAD duplicates 'a'; set membership still equals the
-    # proposal, which used to skip the duplicate check entirely.
-    patch(
-        registry_names=["a", "b"],
-        green=[],
-        covered=[],
-        frontload=["a", "a", "b"],
-    )
-    rc, out, err = _run(mod, monkeypatch, capsys, window=3)
-    assert rc == 0
-    assert "already matches" in out
-    assert "duplicate entries" in out
-
-
-def test_clean_composition_round_trip(compose, monkeypatch, capsys):
-    mod, patch = compose
-    # stale ops lead, then never-sampled cheapest-first by bench cost.
-    patch(
-        registry_names=["w", "x", "y", "z"],
-        green=["w", "z"],
-        covered=["z"],
-        frontload=["w", "y", "x"],
-        cost={"x": 2.0, "y": 0.1},
-    )
-    rc, out, err = _run(mod, monkeypatch, capsys, window=3)
-    assert rc == 0
-    lines = [l.strip().strip('",') for l in out.splitlines() if l.startswith('    "')]
-    assert lines == ["w", "y", "x"]  # stale w first, then y (0.1) before x (2.0)
-    assert "already matches" in out
-
-
-def test_fill_oldest_pads_with_oldest_green_skipping_rows_only(
-    compose, monkeypatch, capsys
-):
-    """Round-9: once the mandatory stale+never set no longer fills the
-    window, --fill-oldest pads it with valid-green ops ordered by the
-    age of their latest green round (cost tie-break), and never spends
-    a slot on an oracle-less rows-only op — its driver check is weaker
-    by design."""
-    from types import SimpleNamespace
-
-    mod, patch = compose
-    # n = never-sampled (mandatory); old/mid/new = covered green rows
-    # from rounds 1/2/3; ro = rows-only (oracle None), also round 1.
-    patch(
-        registry_names=["n", "old", "mid", "new", "ro"],
-        green=["old", "mid", "new", "ro"],
-        covered=["old", "mid", "new", "ro"],
-        frontload=["n", "old", "mid"],
-    )
-    import shared_solar_data_warehouse_spark.registry as reg
-
-    monkeypatch.setattr(
-        reg,
-        "REGISTRY",
-        {
-            name: SimpleNamespace(oracle=None if name == "ro" else "SELECT 1")
-            for name in ["n", "old", "mid", "new", "ro"]
-        },
-    )
-    monkeypatch.setattr(
-        mod,
-        "_latest_green_rounds",
-        lambda root: {"old": 1, "mid": 2, "new": 3, "ro": 1},
-    )
-    monkeypatch.setattr(
-        sys, "argv", ["compose_window.py", "--window", "3", "--fill-oldest"]
-    )
-    rc = mod.main()
-    assert rc == 0
-    out = capsys.readouterr().out
-    lines = [l.strip().strip('",') for l in out.splitlines() if l.startswith('    "')]
-    # mandatory never-sampled 'n' first, then oldest green rows 1 and 2;
-    # 'ro' (also round 1) is skipped for being rows-only, 'new' (round 3)
-    # loses to older evidence.
-    assert lines == ["n", "old", "mid"]
-    assert "fill-oldest: 2 depth re-verifies" in out
-    assert "already matches" in out
-
-
-def test_fill_oldest_noop_when_mandatory_set_fills_window(
-    compose, monkeypatch, capsys
-):
-    """--fill-oldest must not displace mandatory stale/never picks."""
-    mod, patch = compose
-    patch(
-        registry_names=["a", "b", "c"],
-        green=["c"],
-        covered=["c"],
-        frontload=["a", "b"],
-    )
-    monkeypatch.setattr(mod, "_latest_green_rounds", lambda root: {"c": 1})
-    monkeypatch.setattr(
-        sys, "argv", ["compose_window.py", "--window", "2", "--fill-oldest"]
-    )
-    rc = mod.main()
-    out = capsys.readouterr().out
-    assert rc == 0
-    assert "fill-oldest" not in out  # nothing padded
-    lines = [l.strip().strip('",') for l in out.splitlines() if l.startswith('    "')]
-    assert lines == ["a", "b"]
-
-
-def test_update_fingerprints_four_branches(monkeypatch, tmp_path, capsys):
-    """Round-9 pin for tools/update_fingerprints.py, the OTHER
-    round-start landmine: a wrong update rule can stamp an edited-but-
-    unverified op's source as 'driver-green', silently faking coverage.
-    The four branches in one run:
-
-      new:     green op with no record        -> record current
-      kept:    record matches current         -> keep
-      updated: record differs AND op is green
-               in the LATEST round            -> re-stamp (driver just
-                                                 verified the new source)
-      stale:   record differs, NOT in latest  -> keep the OLD record so
-               driver_covered() stays false and the op rotates back in
-    """
-    import importlib
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    monkeypatch.syspath_prepend(os.path.join(repo, "tools"))
-    mod = importlib.import_module("update_fingerprints")
-
-    monkeypatch.setattr(mod, "load_all_ops", lambda: None)
-    monkeypatch.setattr(
-        mod, "REGISTRY", {n: n for n in ["new", "kept", "upd", "stale"]}
-    )
-    # 'gone' is green historically but left the registry -> dropped.
-    monkeypatch.setattr(
-        mod, "driver_green", lambda: {"new", "kept", "upd", "stale", "gone"}
-    )
-    monkeypatch.setattr(
-        mod,
-        "_recorded_fingerprints",
-        lambda: {"kept": "fp_kept", "upd": "fp_old", "stale": "fp_old"},
-    )
-    # current source fingerprints: kept unchanged, upd+stale both edited
-    cur = {"new": "fp_new", "kept": "fp_kept", "upd": "fp_cur", "stale": "fp_cur"}
-    monkeypatch.setattr(mod, "op_fingerprint", lambda o: cur[o])
-    # only 'upd' was re-verified by the latest driver round
-    monkeypatch.setattr(mod, "_latest_round_green", lambda: {"upd"})
-    monkeypatch.setattr(mod, "_repo_root", lambda: str(tmp_path))
-
-    assert mod.main() == 0
-    out = capsys.readouterr().out
-    assert "new=1 kept=1 updated=1 stale=1" in out
-    written = json.loads((tmp_path / "OP_FINGERPRINTS.json").read_text())
-    assert written == {
-        "new": "fp_new",
-        "kept": "fp_kept",
-        "upd": "fp_cur",     # re-stamped: driver verified the edit
-        "stale": "fp_old",   # NOT re-stamped: stays invalid, rotates back
-    }
-    assert "gone" not in written
 
 
 @pytest.fixture()
