@@ -78,7 +78,7 @@ def shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-op-cost hash exchange of (doc_id, text) rows.
 
     The result is localCheckpoint-materialized AND memoized per
-    (context, sf_dir): every consumer fans the shingle column out into
+    (context, snapshot): every consumer fans the shingle column out into
     MANY downstream expressions (24 minhash signatures, posting-list
     explode, verification arrays), and Catalyst's projection collapse
     would otherwise inline the whole tokenize+shingle subtree into each
@@ -105,7 +105,7 @@ def shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return memo_checkpoint(spark, ("shingle_sets", sf_dir), build)
+    return memo_checkpoint(spark, sf_dir, "shingle_sets", build)
 
 
 def _lane_minima(shingles_col, perms) -> F.Column:
@@ -164,7 +164,7 @@ def exact_pairs(spark: SparkSession, sf_dir: str, tau: float) -> DataFrame:
     candidates, or bound posting lists with a document-frequency cap /
     prefix filter first.
 
-    Memoized per (context, sf_dir, tau): the pair list is the second
+    Memoized per (context, snapshot, tau): the pair list is the second
     shared ETL artifact of the dedup pipeline — `dedup_near_shingle`
     publishes it and both connected-component operators consume it.
     """
@@ -203,7 +203,7 @@ def exact_pairs(spark: SparkSession, sf_dir: str, tau: float) -> DataFrame:
             "doc_a", "doc_b", jaccard.alias("jaccard")
         ).filter(F.col("jaccard") >= tau)
 
-    return memo_checkpoint(spark, ("exact_pairs", sf_dir, tau), build)
+    return memo_checkpoint(spark, sf_dir, ("exact_pairs", tau), build)
 
 
 def _pairs_sql(tau: float) -> str:
@@ -317,7 +317,7 @@ _NEAR_MINHASH_ORACLE = f"""
 
 def minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_sh, sig) MinHash signature table, memoized per
-    (context, sf_dir) — the dedup band's second-stage ETL artifact
+    (context, snapshot) — the dedup band's second-stage ETL artifact
     (r11): the 24-lane md5-prefix fold over every shingle is the
     band's single most expensive projection, and both
     `dedup_near_minhash` and `dedup_minhash_calibration` consumed it
@@ -341,7 +341,7 @@ def minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
 
-    return memo_checkpoint(spark, ("minhash_sigs", sf_dir), build)
+    return memo_checkpoint(spark, sf_dir, "minhash_sigs", build)
 
 
 def _bands_of(sg) -> F.Column:
@@ -659,7 +659,7 @@ def _cluster_labels(spark: SparkSession, sf_dir: str, tau: float) -> DataFrame:
             F.coalesce("lab", "doc_id").cast("long").alias("cluster_id"),
         )
 
-    return memo_checkpoint(spark, ("cc_labels", sf_dir, tau), build)
+    return memo_checkpoint(spark, sf_dir, ("cc_labels", tau), build)
 
 
 # --- SimHash near-dup (the third classic dedup family: bit-signature) ---
@@ -731,7 +731,7 @@ def _simhash_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         return votes.select("doc_id", *band_cols)
 
-    return memo_checkpoint(spark, ("simhash_packed", sf_dir), build)
+    return memo_checkpoint(spark, sf_dir, "simhash_packed", build)
 
 
 #: Per-bucket pair generation with the hamming verify FUSED into the

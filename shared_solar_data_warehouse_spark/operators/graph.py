@@ -18,7 +18,7 @@ bit-for-bit, no float-sum nondeterminism anywhere.
 Scale: edges materialize once (memo_checkpoint) and each round is one
 shuffle on dst — at 100 TB you'd co-partition edges and ranks on the
 join key once and reuse the exchange across rounds; node count N is
-the session-memoized scalar the regime gates already require
+the snapshot-memoized scalar the regime gates already require
 (one count() of the node-sized distinct, reused by every graph op).
 """
 
@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from shared_solar_data_warehouse_spark.materialize import memo_checkpoint
+from shared_solar_data_warehouse_spark.materialize import memo, memo_checkpoint
 from shared_solar_data_warehouse_spark.registry import op
 from shared_solar_data_warehouse_spark.sources.io import load_table
 
@@ -57,25 +57,18 @@ def _node_side(df: DataFrame, n_nodes: int) -> DataFrame:
     return F.broadcast(df) if n_nodes <= BROADCAST_MAX_NODES else df
 
 
-#: Trade-graph node count per (app, sf_dir) — the gate input shared by
-#: pagerank/cc/bfs/assortativity, counted once per session over the
-#: memoized edge table instead of once per op (same memo discipline as
-#: memo_checkpoint; an int, so no checkpoint needed).
-_NODE_COUNT_MEMO: dict = {}
-
-
 def _n_graph_nodes(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NODE_COUNT_MEMO:
-        # Count over the memoized node list (r12) — the distinct is
-        # built once and shared with the CC label init.
-        _NODE_COUNT_MEMO[key] = _nodes(spark, sf_dir).count()
-    return _NODE_COUNT_MEMO[key]
+    """Trade-graph node count, the gate input shared by
+    pagerank/cc/bfs/assortativity: one count over the memoized node
+    list per snapshot."""
+    return memo(
+        spark, sf_dir, ("trade_node_count",), lambda: _nodes(spark, sf_dir).count()
+    )
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct undirected customer–supplier edges, materialized once
-    per (app, sf_dir): both pagerank rounds and the degree ops reuse
+    per snapshot: both pagerank rounds and the degree ops reuse
     the join+distinct instead of recomputing it."""
 
     def build() -> DataFrame:
@@ -101,24 +94,25 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             pairs.select(F.col("s_node").alias("src"), F.col("c_node").alias("dst"))
         )
 
-    return memo_checkpoint(spark, ("trade_edges", sf_dir), build)
+    return memo_checkpoint(spark, sf_dir, "trade_edges", build)
 
 
 def _nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct node list of the trade graph, materialized once per
-    (app, sf_dir) — the E-sized distinct that the CC label init (and
+    snapshot — the E-sized distinct that the CC label init (and
     any node-table consumer) otherwise re-runs per invocation (r12,
     guide §2.4; same snapshot-artifact contract as trade_edges/_deg)."""
     return memo_checkpoint(
         spark,
-        ("trade_nodes", sf_dir),
+        sf_dir,
+        "trade_nodes",
         lambda: _edges(spark, sf_dir).select("src").distinct(),
     )
 
 
 def _deg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node degree (src, outdeg) over the memoized doubled edge
-    table, materialized once per (app, sf_dir): pagerank's rank init
+    table, materialized once per snapshot: pagerank's rank init
     and degree annotation, degree_dist's histogram and assortativity's
     moment probes all fold this same aggregate — one E-sized pass per
     snapshot instead of one per op invocation (r12, guide §2.4; the
@@ -126,7 +120,8 @@ def _deg(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself, and the build cost is on the record via memo_cold)."""
     return memo_checkpoint(
         spark,
-        ("trade_deg", sf_dir),
+        sf_dir,
+        "trade_deg",
         lambda: _edges(spark, sf_dir)
         .groupBy("src")
         .agg(F.count(F.lit(1)).alias("outdeg")),
@@ -135,7 +130,7 @@ def _deg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _edges_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree-annotated edge table (src, dst, outdeg), materialized
-    once per (app, sf_dir).  r11 rebuilt this join per pagerank
+    once per snapshot.  r11 rebuilt this join per pagerank
     invocation behind a per-run localCheckpoint; the table is a pure
     function of the snapshot, so it is memo state like the edge list
     it annotates (interleaved A/B at 32 cores: pagerank 3.72 → 2.29 s
@@ -153,7 +148,7 @@ def _edges_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
             edges_d = edges_d.repartition("src")
         return edges_d
 
-    return memo_checkpoint(spark, ("trade_edges_deg", sf_dir), build)
+    return memo_checkpoint(spark, sf_dir, "trade_edges_deg", build)
 
 
 _EDGES_SQL = """
@@ -259,7 +254,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edges and ranks on the node key instead — forcing the broadcast
     # unconditionally OOM'd at a 100x replication probe.
     n_nodes = _n_graph_nodes(spark, sf_dir)
-    # The node count N is already a session-memoized driver int (the
+    # The node count N is already a snapshot-memoized driver int (the
     # regime gate input) and equals count(deg) exactly — distinct src
     # IS deg's key set.  Feeding it back as a literal replaces the r10
     # plan's per-round 1-row crossJoin(nn) (each one re-derived deg →
@@ -362,9 +357,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
       additionally orient by degree so hub neighborhoods stay short,
       and bucket the edge list on u."""
     pairs = memo_checkpoint(
-        spark,
-        ("co_supplier_pairs", sf_dir),
-        lambda: _co_supplier_pairs(spark, sf_dir),
+        spark, sf_dir, "co_supplier_pairs", lambda: _co_supplier_pairs(spark, sf_dir)
     )
 
     from shared_solar_data_warehouse_spark.operators.dedup import (
@@ -604,12 +597,13 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-exchanges regardless — see the r11 after-plan.)  The wedge
     # join itself dominates what remains — inherent to the exact tier
     # (the docstring names the minhash scale path).
-    e = memo_checkpoint(spark, ("building_cs_pairs", sf_dir), build_e)
+    e = memo_checkpoint(spark, sf_dir, "building_cs_pairs", build_e)
     # The degree table is read twice (d1/d2) and is snapshot-pure —
     # same memo treatment (r11 used a per-run lazy barrier).
     deg = memo_checkpoint(
         spark,
-        ("building_supp_deg", sf_dir),
+        sf_dir,
+        "building_supp_deg",
         lambda: e.groupBy("suppkey").agg(F.count(F.lit(1)).alias("deg")),
     )
     # Wedge counting stays the hash self-join on custkey: an r11 A/B of
@@ -1065,9 +1059,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     both endpoints; large graphs run the distributed
     neighborhood-intersection plan (forced in tests via the gate)."""
     pairs = memo_checkpoint(
-        spark,
-        ("co_supplier_pairs", sf_dir),
-        lambda: _co_supplier_pairs(spark, sf_dir),
+        spark, sf_dir, "co_supplier_pairs", lambda: _co_supplier_pairs(spark, sf_dir)
     )
     from shared_solar_data_warehouse_spark.operators.dedup import (
         DRIVER_CC_MAX_EDGES,
@@ -1240,7 +1232,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("sk"), F.col("s_nationkey").alias("s_com")
     )
-    # Reuse the session-memoized trade_edges pair set (its c→s half IS
+    # Reuse the snapshot-memoized trade_edges pair set (its c→s half IS
     # this op's distinct (custkey, suppkey) list) instead of re-running
     # the orders⋈lineitem join + distinct — the op's dominant subtree
     # in the r11 before-plan (guide §2.4).

@@ -314,7 +314,7 @@ def _lsh_plane_sign(p: int, j: int) -> int:
 
 def _lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, bucket) sign-LSH band-bucket table, memoized per
-    (context, sf_dir) — the similarity family's signature ETL artifact,
+    (context, snapshot) — the similarity family's signature ETL artifact,
     the exact analog of the dedup band's shingle/simhash memos: at
     100 TB the signature job writes this once per corpus snapshot and
     every index/query/eval job reads the materialized table (r11;
@@ -370,7 +370,7 @@ def _lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from shared_solar_data_warehouse_spark.materialize import memo_checkpoint
 
-    return memo_checkpoint(spark, ("lsh_buckets", sf_dir), build)
+    return memo_checkpoint(spark, sf_dir, "lsh_buckets", build)
 
 
 def _sim_ann_lsh_oracle() -> str:
@@ -1543,10 +1543,11 @@ def sim_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cqs")
         )
 
-    ctr_row = memo_checkpoint(spark, ("pca_ctr_row", sf_dir), _mk_ctr_row)
+    ctr_row = memo_checkpoint(spark, sf_dir, "pca_ctr_row", _mk_ctr_row)
     dims = memo_checkpoint(
         spark,
-        ("pca_centered_dims", sf_dir),
+        sf_dir,
+        "pca_centered_dims",
         lambda: _xq_arr()
         .crossJoin(F.broadcast(ctr_row))
         .select(

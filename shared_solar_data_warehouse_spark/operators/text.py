@@ -96,7 +96,7 @@ def _tf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks = d.select("doc_id", F.explode("toks").alias("token"))
         return toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
 
-    return memo_checkpoint(spark, ("text_tf", sf_dir), build)
+    return memo_checkpoint(spark, sf_dir, "text_tf", build)
 
 
 @op(

@@ -59,8 +59,8 @@ from shared_solar_data_warehouse_spark.sources.io import load_table
 
 def _hourly_dsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, h, hour_value): the per-circuit hourly energy rollup —
-    the first ETL artifact of any meter pipeline.  Memoized per (app,
-    sf_dir) because both densify operators (`ts_gap_fill`,
+    the first ETL artifact of any meter pipeline.  Memoized per snapshot
+    because both densify operators (`ts_gap_fill`,
     `ts_interp_linear`) start from this identical table; at 100 TB it
     is a written hourly table every downstream job reads, not a
     recompute per query (same pattern as the shared shingle/pair/TF
@@ -72,7 +72,7 @@ def _hourly_dsum(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", F.date_trunc("hour", "ts").alias("h")
         ).agg(dsum("value").alias("hour_value"))
 
-    return memo_checkpoint(spark, ("hourly_dsum", sf_dir), build)
+    return memo_checkpoint(spark, sf_dir, "hourly_dsum", build)
 
 
 @op(

@@ -5,13 +5,17 @@ shuffle makes ``sum(double)`` order-dependent in the last ulps, and with
 enough output groups a ``round(x, 4)`` eventually straddles a rounding
 boundary.  The fix used across the registry is EXACT accumulation:
 
-  Spark side:   round(cast(sum(cast(x AS decimal(25,8))) AS double), 4)
-  DuckDB side:  round(CAST(sum(CAST(x AS DECIMAL(25,8))) AS DOUBLE), 4)
+  Spark side:   cast(round(sum(cast(x AS decimal(25,8))), 4) AS double)
+  DuckDB side:  CAST(round(sum(CAST(x AS DECIMAL(25,8))), 4) AS DOUBLE)
 
 The double->decimal cast rounds the same value to the same 8 fractional
 digits in both engines (tie cases are measure-zero for computed
-doubles), the decimal sum is exact and order-independent, and the final
-decimal->double cast is the deterministic nearest-double.  The helpers
+doubles), the decimal sum is exact and order-independent, the decimal
+round is half-away-from-zero in both, and the final decimal->double
+cast is the deterministic nearest-double.  Rounding the double instead
+splits the engines when the exact sum ends on a half step: Spark rounds
+the shortest decimal repr half-up, DuckDB the binary value, so a sum of
+283778228.83495 gave Spark ...835 and DuckDB ...8349.  The helpers
 below keep the two sides textually adjacent in every operator.
 
 Other pinned rules (enforced by convention in each operator module):
@@ -57,7 +61,7 @@ DEC = "decimal(25,8)"
 def dsum(col: Column | str, ndigits: int = 4) -> Column:
     """Order-independent double sum, rounded: the Spark half of the pattern."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(F.sum(c.cast(DEC)).cast("double"), ndigits)
+    return F.round(F.sum(c.cast(DEC)), ndigits).cast("double")
 
 
 def davg(col: Column | str, ndigits: int = 4) -> Column:
@@ -78,7 +82,7 @@ def davg(col: Column | str, ndigits: int = 4) -> Column:
 
 def sql_dsum(expr: str, ndigits: int = 4) -> str:
     """DuckDB half of :func:`dsum` — keep textually adjacent in oracles."""
-    return f"round(CAST(sum(CAST({expr} AS DECIMAL(25,8))) AS DOUBLE), {ndigits})"
+    return f"CAST(round(sum(CAST({expr} AS DECIMAL(25,8))), {ndigits}) AS DOUBLE)"
 
 
 def sql_davg(expr: str, ndigits: int = 4) -> str:

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from shared_solar_data_warehouse_spark.materialize import memo
 from shared_solar_data_warehouse_spark.registry import op
 from shared_solar_data_warehouse_spark.session import pin_session
 
@@ -40,22 +41,6 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: Resolved fixture-table DataFrames, keyed by (applicationId, sf_dir,
-#: name).  ``spark.read.parquet`` costs ~100 ms of driver work per call
-#: (file listing + footer schema read + relation resolution) and every
-#: op build pays it 1–3×; the fixture files are immutable for the life
-#: of a session, and a DataFrame is an immutable plan, so the resolved
-#: relation is reused (r12, guide §5: the driver should do almost no
-#: data work — repeated footer reads were ~40 s of pure driver latency
-#: across a full 375-op bench pass).  Keyed by applicationId so a plan
-#: can never leak across SparkContexts.  Bounded: |TABLES| × |sf_dirs|.
-_TABLE_MEMO: dict = {}
-
-#: Which sf_dir each temp-view name currently points at, per
-#: applicationId — register_views re-registers ONLY on change.
-_VIEW_STATE: dict = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; also pins parity confs on the session.
 
@@ -63,14 +48,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     native µs TimestampType — so it loads directly with no unit
     conversion; DuckDB sees the identical µs instants.  Operators
     bucket/truncate ``ts`` on both sides anyway (SURVEY.md §5.4).
+
+    The resolved relation is reused per (session, snapshot):
+    ``spark.read.parquet`` costs ~100 ms of driver work per call (file
+    listing, footer schema read, relation resolution).
     """
     pin_session(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _TABLE_MEMO.get(key)
-    if df is None:
-        df = spark.read.parquet(table_path(sf_dir, name))
-        _TABLE_MEMO[key] = df
-    return df
+    return memo(
+        spark,
+        sf_dir,
+        ("table", spark, name),
+        lambda: spark.read.parquet(table_path(sf_dir, name)),
+    )
 
 
 def spread(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -97,16 +86,18 @@ def spread(spark: SparkSession, df: DataFrame) -> DataFrame:
 def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     """Expose fixture tables as temp views for SQL-twin operators.
 
-    Idempotent per (session, sf_dir): re-registration costs ~40 ms of
-    catalog work per view and every SQL op build paid 7 of them
+    Idempotent per (session, snapshot): re-registration costs ~40 ms
+    of catalog work per view and every SQL op build paid 7 of them
     (~0.6 s, 30–50% of a warm SQL-band query) — skip when the view
-    already points at this sf_dir, re-register when the sf_dir changes
-    (r12, guide §5 driver overhead)."""
-    app = spark.sparkContext.applicationId
+    already points at this snapshot, re-register when it changes."""
     for name in names or TABLES:
-        if _VIEW_STATE.get((app, name)) != sf_dir:
-            load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-            _VIEW_STATE[(app, name)] = sf_dir
+        memo(
+            spark,
+            sf_dir,
+            ("view", spark, name),
+            lambda: load_table(spark, sf_dir, name).createOrReplaceTempView(name),
+            exclusive=True,
+        )
 
 
 def scratch_root() -> str:

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -31,6 +32,7 @@ from shared_solar_data_warehouse_spark.session import pin_session
 from shared_solar_data_warehouse_spark.sources.io import scratch_dir, table_path
 
 _COUNTER = itertools.count()
+_CONF_LOCK = threading.Lock()
 
 #: events parquet physical schema — fixtures store ts as TIMESTAMP(MICROS)
 #: (verified via pyarrow.parquet.read_schema on every sf), which maps
@@ -117,31 +119,36 @@ def drain(
     # is read at query START and baked into the checkpoint; measured:
     # 8 -> 4 saves ~0.7 s on the stream-stream join, 4 -> 2 nothing).
     # On a real cluster this is instead sized ~2x total cores.
-    # Restored after the drain — the builder protocol is sequential,
-    # and batch queries under AQE re-coalesce anyway.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    if not nodata_batch:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "false"
+    # Restored after the drain.  The confs are session-global, so one
+    # lock spans the whole get/set/restore window: a drain that began
+    # inside another's window would read its "4" as the value to
+    # restore, and leave it behind if it finished last.  Batch queries
+    # on other threads still see the "4" meanwhile; under AQE they
+    # re-coalesce anyway.
+    with _CONF_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        prev_nodata = spark.conf.get(
+            "spark.sql.streaming.noDataMicroBatches.enabled", "true"
         )
-    try:
-        query = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        if not nodata_batch:
+            spark.conf.set(
+                "spark.sql.streaming.noDataMicroBatches.enabled", "false"
+            )
+        try:
+            query = (
+                sdf.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .trigger(availableNow=True)
+                .start()
+            )
+            query.awaitTermination()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+            spark.conf.set(
+                "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
+            )
     return spark.table(name)
 
 

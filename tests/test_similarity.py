@@ -102,22 +102,23 @@ def test_near_embedding_is_distributed_no_driver_collect(spark, registry):
     assert "FlatMapGroupsInPandas" in plan
 
 
-def test_cluster_distributed_regime_matches_union_find(spark, registry, monkeypatch):
+def test_cluster_distributed_regime_matches_union_find(
+    spark, registry, monkeypatch, tmp_path
+):
     """The >2M-edge distributed min-label-propagation fallback of
     dedup_cluster must produce the identical labeling as the driver
     union-find fast path (it is otherwise only reachable at corpus
-    scales tests never build).  The memoized label map is evicted
-    around the regime switch so the cache cannot mask it."""
-    from shared_solar_data_warehouse_spark import materialize
+    scales tests never build).  Each regime runs on its own copy of
+    the snapshot, so the memoized label map of one cannot mask the
+    other."""
+    import shutil
+
     from shared_solar_data_warehouse_spark.operators import dedup
 
-    def evict():
-        for k in [k for k in materialize._cache if "cc_labels" in repr(k)]:
-            del materialize._cache[k]
-
-    fast = registry["dedup_cluster"].builder(spark, SF_SMALL).collect()
-    evict()
+    fast_sf, dist_sf = (str(tmp_path / n) for n in ("fast", "dist"))
+    for sf in (fast_sf, dist_sf):
+        shutil.copytree(SF_SMALL, sf, copy_function=shutil.copyfile)
+    fast = registry["dedup_cluster"].builder(spark, fast_sf).collect()
     monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", -1)
-    dist = registry["dedup_cluster"].builder(spark, SF_SMALL).collect()
-    evict()
+    dist = registry["dedup_cluster"].builder(spark, dist_sf).collect()
     assert sorted(map(tuple, fast)) == sorted(map(tuple, dist))

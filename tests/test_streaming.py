@@ -720,3 +720,53 @@ def test_stream_dir_replaces_dangling_link(tmp_path):
         assert os.readlink(link) == os.path.join(fresh, "events.parquet")
     finally:
         shutil.rmtree(os.path.dirname(staged), ignore_errors=True)
+
+
+def test_concurrent_drains_restore_session_confs(spark):
+    """Two drains on one session, the second starting inside the
+    first's conf window: both confs end at their original values."""
+    import threading
+    import time
+
+    from shared_solar_data_warehouse_spark.streaming.streams import (
+        drain,
+        events_stream,
+    )
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
+    original = spark.conf.get(keys[0])
+    spark.conf.set(keys[0], "7")  # distinct from the drain's "4"
+    before = {k: spark.conf.get(k, "true") for k in keys}
+    counts = {}
+
+    def light():
+        counts["light"] = drain(
+            spark, events_stream(spark, SF_SMALL), nodata_batch=False
+        ).count()
+
+    def heavy():
+        agg = (
+            events_stream(spark, SF_SMALL)
+            .groupBy(F.window("ts", "1 hour"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        counts["heavy"] = drain(spark, agg, "complete").count()
+
+    try:
+        first = threading.Thread(target=light)
+        first.start()
+        deadline = time.monotonic() + 60
+        while spark.conf.get(keys[0]) != "4" and time.monotonic() < deadline:
+            time.sleep(0.005)
+        second = threading.Thread(target=heavy)
+        second.start()
+        first.join(120)
+        second.join(120)
+        assert not first.is_alive() and not second.is_alive()
+        assert counts["light"] > 0 and counts["heavy"] > 0
+        assert {k: spark.conf.get(k, "true") for k in keys} == before
+    finally:
+        spark.conf.set(keys[0], original)
