@@ -422,18 +422,11 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         SELECT c_mktsegment, c_nationkey,
-               {_spark_dsum('c_acctbal')} AS total_bal,
+               {sql_dsum('c_acctbal')} AS total_bal,
                count(*) AS n_cust
         FROM customer
         GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
         """
-    )
-
-
-def _spark_dsum(expr: str, ndigits: int = 4) -> str:
-    """Spark-SQL text twin of parity.dsum for SQL-entry operators."""
-    return (
-        f"round(CAST(sum(CAST({expr} AS DECIMAL(25,8))) AS DOUBLE), {ndigits})"
     )
 
 
@@ -1403,7 +1396,7 @@ def agg_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "agg_chi_square",
-    oracle="""
+    oracle=f"""
     WITH obs AS (
         SELECT event_type,
                CAST(dayofweek(ts) AS BIGINT) AS dow,
@@ -1431,7 +1424,7 @@ def agg_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT CAST(count(*) AS BIGINT) AS n_cells,
            CAST(max(n) AS BIGINT) AS n_rows,
-           round(CAST(sum(cell_q6) AS DOUBLE) / 1e6, 4) AS chi_square_q4
+           {sql_dsum('cell_q6 / 1e6')} AS chi_square_q4
     FROM cells
     """,
 )
@@ -1443,7 +1436,7 @@ def agg_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     X² = Σ (o−e)²/e.  Each cell's contribution is one shared double
     expression over identical integers, quantized to 1e-6 units
     BEFORE the sum (order-independent, the standard trick), and the
-    final statistic is a single rounded division.  Plan: the
+    statistic is their exact decimal sum, rounded once (``dsum``).  Plan: the
     contingency table is tiny (5 types × 7 days); margins come from
     windows over those 35 rows — the event scan's partial-agg
     groupBy is the only real work at any scale."""
@@ -1474,9 +1467,7 @@ def agg_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cells.agg(
         F.count(F.lit(1)).alias("n_cells"),
         F.max("n").alias("n_rows"),
-        F.round(F.sum("cell_q6").cast("double") / F.lit(1e6), 4).alias(
-            "chi_square_q4"
-        ),
+        dsum(F.col("cell_q6") / F.lit(1e6)).alias("chi_square_q4"),
     )
 
 

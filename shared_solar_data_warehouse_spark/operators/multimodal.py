@@ -213,9 +213,6 @@ def mm_binary_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     rendering Spark's ``hex(content)`` produces — the binaryFile
     scan's (name, size, content) triple is verified bit-for-bit
     against an independent engine with no filesystem access."""
-    from shared_solar_data_warehouse_spark.session import pin_session
-
-    pin_session(spark)  # every builder pins, even timezone-insensitive ones
     path = scratch_dir(sf_dir, "mm_binary_file")
     for i in range(5):
         with open(os.path.join(path, f"asset_{i}.bin"), "wb") as fh:

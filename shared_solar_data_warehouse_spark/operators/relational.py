@@ -872,9 +872,9 @@ SKEW_SALT_N = 8
 
 @op(
     "join_skew_salted",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
-           round(CAST(sum(CAST(l_extendedprice AS DECIMAL(25,8))) AS DOUBLE), 4)
+           {sql_dsum('l_extendedprice')}
                AS total_price,
            count(*) AS n_items
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey

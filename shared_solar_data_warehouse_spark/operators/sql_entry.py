@@ -14,22 +14,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from shared_solar_data_warehouse_spark.parity import sql_dsum
 from shared_solar_data_warehouse_spark.registry import op
 from shared_solar_data_warehouse_spark.sources.io import register_views
 
 # Q1: pricing summary report — full-table agg with computed measures.
-# Each exact decimal sum rounds to 4 places AS A DECIMAL, then casts:
-# round(double, 4) splits the engines when the sum ends exactly on a
-# half step (Spark rounds the shortest decimal string half-up, DuckDB
-# rounds x*1e4 in binary), as a generated snapshot's charge sum of
-# 283778228.83495000 did.  Decimal round is half-up in both engines.
-_Q1_BODY = """
+# Each exact decimal sum rounds as a decimal before the cast to double
+# (parity.sql_dsum, whose docstring has the half-step case that a
+# generated snapshot's charge sum of 283778228.83495000 hit).
+_Q1_BODY = f"""
 SELECT l_returnflag,
        l_linestatus,
-       CAST(round(sum(CAST(l_quantity AS DECIMAL(25,8))), 4) AS DOUBLE) AS sum_qty,
-       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(25,8))), 4) AS DOUBLE) AS sum_base_price,
-       CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(25,8))), 4) AS DOUBLE) AS sum_disc_price,
-       CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(25,8))), 4) AS DOUBLE) AS sum_charge,
+       {sql_dsum('l_quantity')} AS sum_qty,
+       {sql_dsum('l_extendedprice')} AS sum_base_price,
+       {sql_dsum('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
+       {sql_dsum('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
        count(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
@@ -38,9 +37,9 @@ GROUP BY l_returnflag, l_linestatus
 
 # Q3: unshipped-orders revenue (adapted: fixtures lack o_shippriority;
 # project o_orderpriority instead).
-_Q3_BODY = """
+_Q3_BODY = f"""
 SELECT l_orderkey,
-       round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(25,8))) AS DOUBLE), 4) AS revenue,
+       {sql_dsum('l_extendedprice * (1 - l_discount)')} AS revenue,
        CAST(o_orderdate AS DATE) AS orderdate,
        o_orderpriority
 FROM customer
@@ -55,9 +54,9 @@ GROUP BY l_orderkey, o_orderdate, o_orderpriority
 # Q5: local-supplier volume (adapted: fixtures carry no r_name filter
 # year — keep the classic shape: customer and supplier in the SAME
 # nation, revenue per nation within one region and date year).
-_Q5_BODY = """
+_Q5_BODY = f"""
 SELECT n_name,
-       round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(25,8))) AS DOUBLE), 4) AS revenue
+       {sql_dsum('l_extendedprice * (1 - l_discount)')} AS revenue
 FROM customer
 JOIN orders ON c_custkey = o_custkey
 JOIN lineitem ON l_orderkey = o_orderkey
@@ -71,8 +70,8 @@ GROUP BY n_name
 """
 
 # Q6: forecasting revenue change — pure scan-filter-agg.
-_Q6_BODY = """
-SELECT round(CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(25,8))) AS DOUBLE), 4) AS revenue
+_Q6_BODY = f"""
+SELECT {sql_dsum('l_extendedprice * l_discount')} AS revenue
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1994-01-01 00:00:00'
   AND l_shipdate < TIMESTAMP '1995-01-01 00:00:00'
@@ -98,9 +97,9 @@ GROUP BY o_orderpriority
 # Q10: returned-item reporting — who returned goods and what revenue
 # was lost (top customers by lost revenue; full shape minus the
 # fixture-absent address/phone/comment columns).
-_Q10_BODY = """
+_Q10_BODY = f"""
 SELECT c_custkey, c_name,
-       round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(25,8))) AS DOUBLE), 4) AS revenue,
+       {sql_dsum('l_extendedprice * (1 - l_discount)')} AS revenue,
        round(CAST(c_acctbal AS DOUBLE), 4) AS c_acctbal,
        n_name
 FROM customer
@@ -166,9 +165,9 @@ WHERE p_brand = 'Brand#1'
 # use NATION_<k>).  The classic shape: supplier-nation x customer-
 # nation revenue by ship year, with the symmetric two-nation OR
 # predicate pushed below the join.
-_Q7_BODY = """
+_Q7_BODY = f"""
 SELECT supp_nation, cust_nation, l_year,
-       round(CAST(sum(CAST(volume AS DECIMAL(25,8))) AS DOUBLE), 4) AS revenue
+       {sql_dsum('volume')} AS revenue
 FROM (
     SELECT n1.n_name AS supp_nation,
            n2.n_name AS cust_nation,
@@ -222,9 +221,9 @@ GROUP BY o_year
 # Q9: product-type profit by nation and year (adapted: fixtures carry
 # no partsupp/ps_supplycost, so profit is gross discounted revenue —
 # the LIKE-driven part filter and 6-way join shape are the point).
-_Q9_BODY = """
+_Q9_BODY = f"""
 SELECT nation, o_year,
-       round(CAST(sum(CAST(amount AS DECIMAL(25,8))) AS DOUBLE), 4) AS sum_profit
+       {sql_dsum('amount')} AS sum_profit
 FROM (
     SELECT n_name AS nation,
            year(o_orderdate) AS o_year,
@@ -261,9 +260,8 @@ WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
 # Q19: discounted revenue across OR'd brand/quantity/size windows
 # (adapted: fixtures lack l_shipmode/l_shipinstruct; the disjunctive
 # join predicate that must still push the part filters is the point).
-_Q19_BODY = """
-SELECT round(CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-                 AS DECIMAL(25,8))) AS DOUBLE), 4) AS revenue
+_Q19_BODY = f"""
+SELECT {sql_dsum('l_extendedprice * (1 - l_discount)')} AS revenue
 FROM lineitem
 JOIN part ON p_partkey = l_partkey
 WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
@@ -281,10 +279,10 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
 # threshold is computed as exact-decimal-sum / count cast to DOUBLE so
 # the single division is bit-identical on both engines (a raw
 # avg(DOUBLE) would be sum-order dependent).
-_Q22_BODY = """
+_Q22_BODY = f"""
 SELECT cntrycode,
        count(*) AS numcust,
-       round(CAST(sum(CAST(c_acctbal AS DECIMAL(25,8))) AS DOUBLE), 4) AS totacctbal
+       {sql_dsum('c_acctbal')} AS totacctbal
 FROM (
     SELECT c_nationkey AS cntrycode, c_acctbal
     FROM customer
@@ -306,11 +304,11 @@ GROUP BY cntrycode
 
 # Q18: large-volume customers — HAVING over a grouped fact, joined
 # back to the dimension chain.
-_Q18_BODY = """
+_Q18_BODY = f"""
 SELECT c_name, c_custkey, o_orderkey,
        CAST(o_orderdate AS DATE) AS orderdate,
        round(CAST(o_totalprice AS DOUBLE), 4) AS o_totalprice,
-       round(CAST(sum(CAST(l_quantity AS DECIMAL(25,8))) AS DOUBLE), 4) AS sum_qty
+       {sql_dsum('l_quantity')} AS sum_qty
 FROM customer
 JOIN orders ON c_custkey = o_custkey
 JOIN lineitem ON o_orderkey = l_orderkey
@@ -348,9 +346,9 @@ GROUP BY s_acctbal, s_name, n_name, p_partkey, p_type
 # shipped value sum from lineitem instead of ps_supplycost*ps_availqty).
 # HAVING compares an exact-decimal group sum against an uncorrelated
 # scalar subquery — both engines compare exact decimals, no float drift.
-_Q11_BODY = """
+_Q11_BODY = f"""
 SELECT l_partkey,
-       round(CAST(sum(CAST(l_extendedprice * l_quantity AS DECIMAL(25,8))) AS DOUBLE), 4) AS value
+       {sql_dsum('l_extendedprice * l_quantity')} AS value
 FROM lineitem, supplier, nation
 WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey AND n_regionkey = 2
 GROUP BY l_partkey

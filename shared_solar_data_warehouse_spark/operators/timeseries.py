@@ -614,7 +614,7 @@ def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT user_id,
            CAST(date_trunc('day', hour) AS DATE) AS day,
-           round(CAST(sum(CAST(hour_value AS DECIMAL(25,8))) AS DOUBLE), 4)
+           {sql_dsum('hour_value')}
                AS day_value,
            CAST(sum(n_events) AS BIGINT) AS n_events,
            count(*) AS n_hours_active
@@ -640,9 +640,7 @@ def ts_rollup_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hourly.groupBy(
         "user_id", F.to_date(F.date_trunc("day", "hour")).alias("day")
     ).agg(
-        F.round(
-            F.sum(F.col("hour_value").cast(DEC)).cast("double"), 4
-        ).alias("day_value"),
+        dsum("hour_value").alias("day_value"),
         F.sum("n_events").alias("n_events"),
         F.count(F.lit(1)).alias("n_hours_active"),
     )

@@ -9,11 +9,14 @@ contract file trivial and the inventory greppable against SURVEY.md §2.
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from shared_solar_data_warehouse_spark.session import pin_session
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -57,14 +60,22 @@ def op(
     The builder must be a pure function of (spark, sf_dir) — no globals,
     no cached state — and must alias every computed column to the same
     lower_snake_case name the oracle SQL uses (SURVEY.md §3.5, §5.4).
+    ``Op.builder`` is the builder behind a wrapper that pins the
+    caller's session first (``session.pin_session``), so builders never
+    pin it themselves.
     """
 
     def register(builder: Builder) -> Builder:
         if name in REGISTRY:
             raise ValueError(f"duplicate op name: {name}")
+
+        @functools.wraps(builder)
+        def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return builder(pin_session(spark), sf_dir)
+
         REGISTRY[name] = Op(
             name=name,
-            builder=builder,
+            builder=pinned,
             oracle=oracle.strip() if oracle else None,
             tags=tuple(tags),
             doc=doc or (builder.__doc__ or ""),

@@ -1,17 +1,24 @@
-"""SparkSession construction and parity-critical session pinning.
+"""SparkSession construction and the one place session confs change.
 
-The ONLY place a session is built (SURVEY.md §7.0). The driver harness
-passes us ITS session, so every registry builder calls ``pin_session``
-defensively: these are runtime SQL confs, safe to set on a live session,
-and they are what makes results hash-comparable against the DuckDB
-oracle (UTC timestamps) and fast on local[N] (AQE, small shuffle
-partition count for small SFs).
+The ONLY place a session is built (SURVEY.md §7.0), and the only module
+that sets a conf on one.  Three kinds of conf, each set in one spot:
 
-Static confs — the codegen cache size among them — are fixed when the
-JVM's SparkContext starts, so they apply only to sessions that
-``get_session`` builds (``bench.py``, the tests, ``perfbench``).  A
-session the harness passes in keeps whatever its operator chose;
-``pin_session`` cannot change that and does not try.
+- Static confs (the codegen cache size among them) are fixed when the
+  JVM's SparkContext starts, so they apply only to sessions that
+  ``get_session`` builds (``bench.py``, the tests, ``perfbench``).  A
+  session a harness passes in keeps whatever its operator chose.
+- ``_RUNTIME_CONFS`` (UTC time zone, AQE, Arrow, the recursion guard)
+  and the local-mode shuffle sizing are what make results
+  hash-comparable against the DuckDB oracle and fast on local[N].
+  ``pin_session`` sets them; ``registry.op`` calls it on the caller's
+  session once per op call, before the builder runs, so every entry
+  point (``__spark_entry__``, ``bench.py``, ``mirror``, perfbench) is
+  covered and no builder pins on its own.
+- Stream queries are built on and started from ``streaming_session``:
+  an engine-owned ``newSession()`` of the caller's application whose
+  stream confs are set once, when it is made.  A drain therefore never
+  writes the caller's session, and a batch op on another thread keeps
+  its own shuffle partition count.
 """
 
 from __future__ import annotations
@@ -19,6 +26,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from shared_solar_data_warehouse_spark.materialize import memo
 
 #: Spark's codegen cache (``spark.sql.codegen.cache.maxEntries``, a static
 #: conf) holds 100 generated classes by default, fewer than the engine's
@@ -73,6 +82,46 @@ def pin_session(spark: SparkSession) -> SparkSession:
     except Exception:
         pass
     return spark
+
+
+def streaming_session(
+    spark: SparkSession, sf_dir: str, nodata_batch: bool = True
+) -> SparkSession:
+    """The engine-owned session stream queries on ``sf_dir`` run on.
+
+    A pinned ``spark.newSession()`` (same SparkContext, own confs and
+    temp views), made once per snapshot and flag through
+    ``materialize.memo``.  Stateful operators spin one state-store
+    instance per shuffle partition per micro-batch; at fixture scale
+    that fixed cost dominates, so the session runs streams with few
+    state partitions (read when a query starts and baked into its
+    checkpoint; measured: 8 -> 4 saves ~0.7 s on the stream-stream
+    join, 4 -> 2 nothing).  On a real cluster this is instead sized
+    ~2x total cores.
+
+    ``nodata_batch=False`` disables the trailing no-data micro-batch
+    (``spark.sql.streaming.noDataMicroBatches.enabled``) for queries
+    whose OUTPUT cannot depend on it — ops that emit rows the moment
+    they are seen/matched (dropDuplicatesWithinWatermark, inner
+    stream-stream joins), where the extra batch only evicts state that
+    availableNow is about to drop anyway.  The r12 batch probe
+    measured that eviction-only batch at 1.1–1.8 s on the
+    stream-stream join (a full state-store load/commit cycle across
+    every partition with zero input rows) and 0.4–0.6 s on the dedup.
+    Watermark-gated APPEND AGGREGATES (stream_watermark) must keep the
+    default: their finalized windows are emitted BY the no-data batch.
+    """
+
+    def build() -> SparkSession:
+        session = pin_session(spark.newSession())
+        session.conf.set("spark.sql.shuffle.partitions", "4")
+        if not nodata_batch:
+            session.conf.set(
+                "spark.sql.streaming.noDataMicroBatches.enabled", "false"
+            )
+        return session
+
+    return memo(spark, sf_dir, ("streaming_session", nodata_batch), build)
 
 
 def get_session(

@@ -19,8 +19,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from shared_solar_data_warehouse_spark.materialize import memo
+from shared_solar_data_warehouse_spark.parity import dsum, sql_dsum
 from shared_solar_data_warehouse_spark.registry import op
-from shared_solar_data_warehouse_spark.session import pin_session
 
 #: All fixture tables, in FK-dependency order (FIXTURES.md).
 TABLES = (
@@ -42,7 +42,7 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table; also pins parity confs on the session.
+    """Load one fixture table.
 
     ``events.ts`` is TIMESTAMP(MICROS) in the fixture parquet — Spark's
     native µs TimestampType — so it loads directly with no unit
@@ -53,7 +53,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``spark.read.parquet`` costs ~100 ms of driver work per call (file
     listing, footer schema read, relation resolution).
     """
-    pin_session(spark)
     return memo(
         spark,
         sf_dir,
@@ -254,9 +253,9 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "sink_csv",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
-           round(CAST(sum(CAST(l_extendedprice AS DECIMAL(25,8))) AS DOUBLE), 4)
+           {sql_dsum('l_extendedprice')}
                AS total_price,
            count(*) AS n_rows
     FROM lineitem GROUP BY l_returnflag
@@ -269,8 +268,6 @@ def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB export keeps natural partitioning and lets the downstream
     consumer glob the directory.
     """
-    from shared_solar_data_warehouse_spark.parity import dsum
-
     path = scratch_dir(sf_dir, "sink_csv")
     report = (
         load_table(spark, sf_dir, "lineitem")
@@ -294,7 +291,6 @@ def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 @op("source_range", oracle="SELECT range AS id, range * 2 AS doubled FROM range(0, 1000)")
 def source_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthetic distributed generator (`Range` physical node, no input I/O)."""
-    pin_session(spark)
     return spark.range(0, 1000).select(
         F.col("id"), (F.col("id") * 2).alias("doubled")
     )
@@ -526,14 +522,14 @@ def sink_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "scan_partition_pruned_dynamic",
-    oracle="""
+    oracle=f"""
     WITH dim AS (
         SELECT DISTINCT CAST(year(o_orderdate) AS INTEGER) AS yr
         FROM orders WHERE o_orderstatus = 'F'
     )
     SELECT CAST(ship_year AS INTEGER) AS ship_year,
            count(*) AS n_rows,
-           round(CAST(sum(CAST(l_extendedprice AS DECIMAL(25,8))) AS DOUBLE), 4)
+           {sql_dsum('l_extendedprice')}
                AS revenue
     FROM (SELECT CAST(year(l_shipdate) AS INTEGER) AS ship_year,
                  l_extendedprice
@@ -567,8 +563,6 @@ def scan_partition_pruned_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame
         .select(F.year("o_orderdate").alias("yr"))
         .distinct()
     )
-    from shared_solar_data_warehouse_spark.parity import dsum
-
     return (
         fact.join(F.broadcast(dim), fact.ship_year == dim.yr)
         .groupBy(F.col("ship_year").cast("int").alias("ship_year"))
@@ -776,7 +770,6 @@ def source_calendar_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     used), weekend and month-end flags.  At 100 TB the spine is still
     365×years rows — it broadcasts; generation beats maintaining a
     physical date table nobody remembers to extend."""
-    pin_session(spark)
     days = spark.range(0, 366).select(
         F.date_add(F.lit("2024-01-01").cast("date"), F.col("id").cast("int")).alias(
             "cal_date"

@@ -19,20 +19,18 @@ from __future__ import annotations
 
 import itertools
 import os
-import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from shared_solar_data_warehouse_spark.parity import DEC, sql_dsum
+from shared_solar_data_warehouse_spark.parity import dsum, sql_dsum
 from shared_solar_data_warehouse_spark.registry import op
-from shared_solar_data_warehouse_spark.session import pin_session
+from shared_solar_data_warehouse_spark.session import streaming_session
 from shared_solar_data_warehouse_spark.sources.io import scratch_dir, table_path
 
 _COUNTER = itertools.count()
-_CONF_LOCK = threading.Lock()
 
 #: events parquet physical schema — fixtures store ts as TIMESTAMP(MICROS)
 #: (verified via pyarrow.parquet.read_schema on every sf), which maps
@@ -72,84 +70,53 @@ def _stream_dir(sf_dir: str) -> str:
     return d
 
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_stream(
+    spark: SparkSession, sf_dir: str, *, nodata_batch: bool = True
+) -> DataFrame:
     """The events table as a file-source stream (µs TimestampType,
-    identical to what the batch loader reads).
+    identical to what the batch loader reads), built on the engine's
+    ``session.streaming_session`` so the query that drains it runs
+    with the stream confs and never touches ``spark``'s; see there for
+    ``nodata_batch``.
 
-    Replay knob: when ``spark.sswh.stream.maxFilesPerTrigger`` is set,
-    it is passed through as the source's ``maxFilesPerTrigger``, which
-    ``trigger(availableNow=True)`` respects — a multi-file events
-    directory then drains as one micro-batch PER FILE instead of one
-    shot, which is how tests/test_streaming.py replays every op over
-    3-batch (and out-of-order) arrival.  Unset (the default and the
-    bench path) the source drains everything in a single batch."""
-    pin_session(spark)
-    reader = spark.readStream.schema(_EVENTS_RAW_SCHEMA).format("parquet")
+    Replay knob: when ``spark.sswh.stream.maxFilesPerTrigger`` is set
+    on ``spark``, it is passed through as the source's
+    ``maxFilesPerTrigger``, which ``trigger(availableNow=True)``
+    respects — a multi-file events directory then drains as one
+    micro-batch PER FILE instead of one shot, which is how
+    tests/test_streaming.py replays every op over 3-batch (and
+    out-of-order) arrival.  Unset (the default and the bench path) the
+    source drains everything in a single batch."""
+    session = streaming_session(spark, sf_dir, nodata_batch)
+    reader = session.readStream.schema(_EVENTS_RAW_SCHEMA).format("parquet")
     mft = spark.conf.get("spark.sswh.stream.maxFilesPerTrigger", None)
     if mft:
         reader = reader.option("maxFilesPerTrigger", mft)
     return reader.load(_stream_dir(sf_dir))
 
 
-def drain(
-    spark: SparkSession,
-    sdf: DataFrame,
-    mode: str = "append",
-    nodata_batch: bool = True,
-) -> DataFrame:
+def drain(sdf: DataFrame, mode: str = "append") -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) into a
     memory sink; return the final result as a batch DataFrame.
 
-    ``nodata_batch=False`` disables the trailing no-data micro-batch
-    (``spark.sql.streaming.noDataMicroBatches.enabled``) for queries
-    whose OUTPUT cannot depend on it — ops that emit rows the moment
-    they are seen/matched (dropDuplicatesWithinWatermark, inner
-    stream-stream joins), where the extra batch only evicts state that
-    availableNow is about to drop anyway.  The r12 batch probe
-    measured that eviction-only batch at 1.1–1.8 s on the
-    stream-stream join (a full state-store load/commit cycle across
-    every partition with zero input rows) and 0.4–0.6 s on the dedup.
-    Watermark-gated APPEND AGGREGATES (stream_watermark) must keep the
-    default: their finalized windows are emitted BY the no-data batch.
+    The query runs on ``sdf``'s session (``events_stream`` builds it on
+    the streaming session).  The sink's temp view is dropped once the
+    result is resolved: the resolved plan keeps the sink's rows, and a
+    listed view would keep them for the life of the session.
     """
     name = f"sswh_mem_{os.getpid()}_{next(_COUNTER)}"
-    # Stateful operators spin one state-store instance per shuffle
-    # partition per micro-batch; at fixture scale that fixed cost
-    # dominates, so run the stream with few state partitions (the knob
-    # is read at query START and baked into the checkpoint; measured:
-    # 8 -> 4 saves ~0.7 s on the stream-stream join, 4 -> 2 nothing).
-    # On a real cluster this is instead sized ~2x total cores.
-    # Restored after the drain.  The confs are session-global, so one
-    # lock spans the whole get/set/restore window: a drain that began
-    # inside another's window would read its "4" as the value to
-    # restore, and leave it behind if it finished last.  Batch queries
-    # on other threads still see the "4" meanwhile; under AQE they
-    # re-coalesce anyway.
-    with _CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_nodata = spark.conf.get(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        if not nodata_batch:
-            spark.conf.set(
-                "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-            )
-        try:
-            query = (
-                sdf.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            spark.conf.set(
-                "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-            )
-    return spark.table(name)
+    query = (
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    session = sdf.sparkSession
+    result = session.table(name)
+    session.catalog.dropTempView(name)
+    return result
 
 
 @op(
@@ -166,7 +133,7 @@ def stream_ingest_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = s.filter(F.col("value") > 150.0).select(
         "event_id", "user_id", "event_type", F.round("value", 4).alias("value")
     )
-    return drain(spark, out, "append")
+    return drain(out, "append")
 
 
 @op(
@@ -185,9 +152,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = events_stream(spark, sf_dir)
     agg = s.groupBy(F.window("ts", "1 day"), "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum(F.col("value").cast(DEC)).cast("double"), 4).alias(
-            "total_value"
-        ),
+        dsum("value").alias("total_value"),
     )
     out = agg.select(
         F.col("window.start").cast("date").alias("day"),
@@ -195,7 +160,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "total_value",
     )
-    return drain(spark, out, "complete")
+    return drain(out, "complete")
 
 
 @op(
@@ -219,7 +184,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("window.start").cast("date").alias("window_start_day"),
         "n_events",
     )
-    return drain(spark, out, "complete")
+    return drain(out, "complete")
 
 
 @op(
@@ -255,9 +220,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.session_window("ts", "30 minutes"), F.col("user_id")
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum(F.col("value").cast(DEC)).cast("double"), 4).alias(
-            "session_value"
-        ),
+        dsum("value").alias("session_value"),
     )
     out = agg.select(
         "user_id",
@@ -268,7 +231,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "session_value",
     )
-    return drain(spark, out, "complete")
+    return drain(out, "complete")
 
 
 @op(
@@ -298,7 +261,7 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = agg.select(
         F.col("window.start").cast("date").alias("day"), "n_events"
     )
-    return drain(spark, out, "append")
+    return drain(out, "append")
 
 
 @op(
@@ -310,16 +273,16 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every record duplicated — the GSM re-upload case), and
     dropDuplicatesWithinWatermark restores one row per event_id while
     keeping only a watermark-bounded id window in state."""
-    a = events_stream(spark, sf_dir)
-    b = events_stream(spark, sf_dir)
+    # First-seen rows are emitted in the batch that carries them; the
+    # trailing no-data batch would only evict state (r12 probe: 0.4–
+    # 0.6 s of state-store cycling for zero output rows) — skip it.
+    a = events_stream(spark, sf_dir, nodata_batch=False)
+    b = events_stream(spark, sf_dir, nodata_batch=False)
     doubled = a.unionByName(b).withWatermark("ts", "1 hour")
     deduped = doubled.dropDuplicatesWithinWatermark(["event_id"]).select(
         "event_id", "user_id", "event_type"
     )
-    # First-seen rows are emitted in the batch that carries them; the
-    # trailing no-data batch would only evict state (r12 probe: 0.4–
-    # 0.6 s of state-store cycling for zero output rows) — skip it.
-    return drain(spark, deduped, "append", nodata_batch=False)
+    return drain(deduped, "append")
 
 
 @op(
@@ -389,7 +352,7 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    drained = drain(spark, result, "update")
+    drained = drain(result, "update")
     # An update-mode memory sink holds one emission per (key, batch);
     # the op's result is the CURRENT state snapshot = the last
     # emission per key.  n_events is strictly monotone per key (a key
@@ -428,7 +391,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = s.join(F.broadcast(dim), s.user_id == dim.c_custkey)
     agg = joined.groupBy("c_mktsegment").agg(F.count(F.lit(1)).alias("n_events"))
-    return drain(spark, agg, "complete")
+    return drain(agg, "complete")
 
 
 @op(
@@ -449,8 +412,14 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval condition bounds both join states).  Joins on
     second-truncated event time so the µs-vs-ns source precision can't
     flip the interval boundary."""
+    # INNER stream-stream join: matches are emitted in the batch where
+    # both sides are in state — the trailing no-data batch only evicts
+    # watermark-expired state (r12 probe: 1.1–1.8 s of state-store
+    # load/commit across every partition for zero output rows).  An
+    # OUTER stream-stream join would NEED that batch (null-extended
+    # rows emit on eviction); this one does not — skip it.
     clicks = (
-        events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir, nodata_batch=False)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -460,7 +429,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("c_tss", "1 hour")
     )
     purchases = (
-        events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir, nodata_batch=False)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -475,13 +444,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_tss") >= F.col("c_tss"))
         & (F.col("p_tss") <= F.col("c_tss") + F.expr("INTERVAL 1 HOUR")),
     ).select("click_id", "purchase_id", F.col("p_user").alias("user_id"))
-    # INNER stream-stream join: matches are emitted in the batch where
-    # both sides are in state — the trailing no-data batch only evicts
-    # watermark-expired state (r12 probe: 1.1–1.8 s of state-store
-    # load/commit across every partition for zero output rows).  An
-    # OUTER stream-stream join would NEED that batch (null-extended
-    # rows emit on eviction); this one does not — skip it.
-    return drain(spark, joined, "append", nodata_batch=False)
+    return drain(joined, "append")
 
 
 @op(
@@ -523,10 +486,10 @@ def source_rate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic synthetic stream source (rate-micro-batch: fixed
     rows per batch) — the load-generator used for soak tests; drained
     for a bounded number of rows then stopped."""
-    pin_session(spark)
+    session = streaming_session(spark, sf_dir)
     name = f"sswh_rate_{os.getpid()}_{next(_COUNTER)}"
     s = (
-        spark.readStream.format("rate-micro-batch")
+        session.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", 128)
         .option("startTimestamp", 0)
         .load()
@@ -539,10 +502,12 @@ def source_rate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     deadline = time.time() + 30
-    while time.time() < deadline and spark.table(name).count() < 128:
+    while time.time() < deadline and session.table(name).count() < 128:
         time.sleep(0.2)
     query.stop()
-    return spark.table(name).filter(F.col("value") < 128)
+    result = session.table(name).filter(F.col("value") < 128)
+    session.catalog.dropTempView(name)
+    return result
 
 
 @op(
@@ -614,7 +579,7 @@ def stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    drained = drain(spark, result, "update")
+    drained = drain(result, "update")
     # Collapse the update-mode per-batch emissions to the current
     # state snapshot (last emission per key — n_events is strictly
     # monotone per key); identity under the one-batch drain.  See

@@ -1,7 +1,8 @@
 """Session construction and session state: the codegen cache is sized
 to the engine's working set, so warm panels run from cached generated
-classes; builders leave the session's confs as they found them; and
-scratch trees root at the process temp dir."""
+classes; every registry op pins the caller's session and otherwise
+leaves its confs as it found them; and scratch trees root at the
+process temp dir."""
 
 from __future__ import annotations
 
@@ -75,6 +76,27 @@ def test_builders_leave_session_confs_unchanged(spark, registry):
     for name in ("sink_parquet_partitioned", "sql_recursive_cte"):
         assert registry[name].builder(spark, SF_SMALL).collect()
     assert spark.conf.getAll == before
+
+
+def test_registry_pins_every_builder(spark):
+    """``scan_xml`` never pins the session itself; the registry pins it
+    before the builder runs, whichever entry point calls it."""
+    import inspect
+
+    from shared_solar_data_warehouse_spark.registry import REGISTRY, queries
+    from shared_solar_data_warehouse_spark.sources import io
+
+    key = "spark.sql.session.timeZone"
+    spark.conf.set(key, "America/New_York")
+    try:
+        queries()["scan_xml"](spark, SF_SMALL)
+        assert spark.conf.get(key) == "UTC"
+    finally:
+        spark.conf.set(key, "UTC")
+    builder = REGISTRY["scan_xml"].builder
+    assert builder.__module__ == io.__name__
+    assert builder.__doc__ == io.scan_xml.__doc__
+    assert inspect.getsource(builder) == inspect.getsource(io.scan_xml)
 
 
 def test_scratch_dir_roots_at_the_temp_dir(monkeypatch, tmp_path):

@@ -698,7 +698,7 @@ def test_stream_dir_repoints_reused_basename(spark, tmp_path):
         assert os.readlink(link) == os.path.join(first, "events.parquet")
         assert _stream_dir(second) == staged
         assert os.readlink(link) == os.path.join(second, "events.parquet")
-        assert drain(spark, events_stream(spark, second)).count() == 100
+        assert drain(events_stream(spark, second)).count() == 100
     finally:
         shutil.rmtree(os.path.dirname(staged), ignore_errors=True)
 
@@ -722,51 +722,97 @@ def test_stream_dir_replaces_dangling_link(tmp_path):
         shutil.rmtree(os.path.dirname(staged), ignore_errors=True)
 
 
-def test_concurrent_drains_restore_session_confs(spark):
-    """Two drains on one session, the second starting inside the
-    first's conf window: both confs end at their original values."""
+def test_drains_never_change_caller_session_confs(spark, registry):
+    """Stream ops drain on the engine's streaming session: while one
+    thread drains stream ops (including one that skips the no-data
+    batch) and another runs a batch op on the same session, the
+    caller's stream confs never change, and the batch op's result is
+    the serial one."""
     import threading
     import time
-
-    from shared_solar_data_warehouse_spark.streaming.streams import (
-        drain,
-        events_stream,
-    )
 
     keys = (
         "spark.sql.shuffle.partitions",
         "spark.sql.streaming.noDataMicroBatches.enabled",
     )
+
+    def confs() -> tuple:
+        return tuple(spark.conf.get(k, "true") for k in keys)
+
+    def rows(name: str) -> list:
+        return sorted(registry[name].builder(spark, SF_SMALL).collect())
+
     original = spark.conf.get(keys[0])
-    spark.conf.set(keys[0], "7")  # distinct from the drain's "4"
-    before = {k: spark.conf.get(k, "true") for k in keys}
-    counts = {}
+    spark.conf.set(keys[0], "7")  # distinct from the streaming session's "4"
+    before = confs()
+    serial = rows("sql_tpch_q1")
+    errors, seen, batch = [], set(), []
+    done = threading.Event()
 
-    def light():
-        counts["light"] = drain(
-            spark, events_stream(spark, SF_SMALL), nodata_batch=False
-        ).count()
+    def drains():
+        try:
+            for name in ("stream_tumbling", "stream_dedup", "stream_tumbling"):
+                assert registry[name].builder(spark, SF_SMALL).count() > 0
+        except BaseException as exc:  # surfaced by the main thread
+            errors.append(exc)
+        finally:
+            done.set()
 
-    def heavy():
-        agg = (
-            events_stream(spark, SF_SMALL)
-            .groupBy(F.window("ts", "1 hour"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        counts["heavy"] = drain(spark, agg, "complete").count()
+    def batches():
+        try:
+            while not done.is_set():
+                batch.append(rows("sql_tpch_q1"))
+        except BaseException as exc:
+            errors.append(exc)
 
+    threads = [threading.Thread(target=drains), threading.Thread(target=batches)]
     try:
-        first = threading.Thread(target=light)
-        first.start()
-        deadline = time.monotonic() + 60
-        while spark.conf.get(keys[0]) != "4" and time.monotonic() < deadline:
-            time.sleep(0.005)
-        second = threading.Thread(target=heavy)
-        second.start()
-        first.join(120)
-        second.join(120)
-        assert not first.is_alive() and not second.is_alive()
-        assert counts["light"] > 0 and counts["heavy"] > 0
-        assert {k: spark.conf.get(k, "true") for k in keys} == before
+        for t in threads:
+            t.start()
+        polls = 0
+        while not done.is_set():
+            seen.add(confs())
+            polls += 1
+            time.sleep(0.002)
+        for t in threads:
+            t.join(120)
     finally:
         spark.conf.set(keys[0], original)
+    assert not errors, errors
+    assert polls > 0 and batch
+    assert seen <= {before}
+    assert all(r == serial for r in batch)
+
+
+def test_streaming_session_is_engine_owned(spark):
+    """One memoized session per snapshot and no-data flag, separate
+    from the caller's, with the stream confs set once when made."""
+    from shared_solar_data_warehouse_spark.session import streaming_session
+
+    session = streaming_session(spark, SF_SMALL)
+    skip = streaming_session(spark, SF_SMALL, nodata_batch=False)
+    assert session is streaming_session(spark, SF_SMALL)
+    assert len({id(spark), id(session), id(skip)}) == 3
+    assert session.conf.get("spark.sql.shuffle.partitions") == "4"
+    assert session.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert skip.conf.get("spark.sql.streaming.noDataMicroBatches.enabled") == (
+        "false"
+    )
+
+
+def test_drain_drops_its_memory_sink_view(spark):
+    """The memory sink's temp view goes once the result is resolved;
+    the result still holds the sink's rows."""
+    from shared_solar_data_warehouse_spark.streaming.streams import (
+        drain,
+        events_stream,
+    )
+
+    result = drain(events_stream(spark, SF_SMALL))
+    views = [
+        t.name
+        for t in result.sparkSession.catalog.listTables()
+        if t.name.startswith("sswh_mem_")
+    ]
+    assert views == []
+    assert len(result.collect()) == result.count() > 0
