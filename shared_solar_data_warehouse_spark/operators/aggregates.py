@@ -1436,8 +1436,8 @@ def agg_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     X² = Σ (o−e)²/e.  Each cell's contribution is one shared double
     expression over identical integers, quantized to 1e-6 units
     BEFORE the sum (order-independent, the standard trick), and the
-    statistic is their exact decimal sum, rounded once (``dsum``).  Plan: the
-    contingency table is tiny (5 types × 7 days); margins come from
+    statistic is their exact decimal sum, rounded once (``dsum``).
+    Plan: the contingency table is tiny (5 types × 7 days); margins come from
     windows over those 35 rows — the event scan's partial-agg
     groupBy is the only real work at any scale."""
     e = load_table(spark, sf_dir, "events")

@@ -1,24 +1,16 @@
 """SparkSession construction and the one place session confs change.
 
-The ONLY place a session is built (SURVEY.md §7.0), and the only module
-that sets a conf on one.  Three kinds of conf, each set in one spot:
-
-- Static confs (the codegen cache size among them) are fixed when the
-  JVM's SparkContext starts, so they apply only to sessions that
-  ``get_session`` builds (``bench.py``, the tests, ``perfbench``).  A
-  session a harness passes in keeps whatever its operator chose.
-- ``_RUNTIME_CONFS`` (UTC time zone, AQE, Arrow, the recursion guard)
-  and the local-mode shuffle sizing are what make results
-  hash-comparable against the DuckDB oracle and fast on local[N].
-  ``pin_session`` sets them; ``registry.op`` calls it on the caller's
-  session once per op call, before the builder runs, so every entry
-  point (``__spark_entry__``, ``bench.py``, ``mirror``, perfbench) is
-  covered and no builder pins on its own.
-- Stream queries are built on and started from ``streaming_session``:
-  an engine-owned ``newSession()`` of the caller's application whose
-  stream confs are set once, when it is made.  A drain therefore never
-  writes the caller's session, and a batch op on another thread keeps
-  its own shuffle partition count.
+The ONLY place a session is built (SURVEY.md §7.0) or has a conf set.
+Static confs, the codegen cache size among them, are fixed when the
+JVM's SparkContext starts, so they apply only to sessions that
+``get_session`` builds (``bench.py``, the tests, ``perfbench``); a
+session a harness passes in keeps whatever its operator chose.
+``pin_session`` sets the runtime confs that make results
+hash-comparable against the DuckDB oracle (UTC timestamps) and fast on
+local[N]; ``registry.op`` calls it on the caller's session once per op
+call, so every entry point is covered and no builder pins.  Stream
+queries run on ``streaming_session``, whose stream confs are set once
+when it is made, so a drain never writes the caller's session.
 """
 
 from __future__ import annotations
@@ -102,12 +94,7 @@ def streaming_session(
     ``nodata_batch=False`` disables the trailing no-data micro-batch
     (``spark.sql.streaming.noDataMicroBatches.enabled``) for queries
     whose OUTPUT cannot depend on it — ops that emit rows the moment
-    they are seen/matched (dropDuplicatesWithinWatermark, inner
-    stream-stream joins), where the extra batch only evicts state that
-    availableNow is about to drop anyway.  The r12 batch probe
-    measured that eviction-only batch at 1.1–1.8 s on the
-    stream-stream join (a full state-store load/commit cycle across
-    every partition with zero input rows) and 0.4–0.6 s on the dedup.
+    they are seen/matched, where the extra batch only evicts state.
     Watermark-gated APPEND AGGREGATES (stream_watermark) must keep the
     default: their finalized windows are emitted BY the no-data batch.
     """

@@ -74,10 +74,8 @@ def events_stream(
     spark: SparkSession, sf_dir: str, *, nodata_batch: bool = True
 ) -> DataFrame:
     """The events table as a file-source stream (µs TimestampType,
-    identical to what the batch loader reads), built on the engine's
-    ``session.streaming_session`` so the query that drains it runs
-    with the stream confs and never touches ``spark``'s; see there for
-    ``nodata_batch``.
+    identical to what the batch loader reads), built on
+    ``session.streaming_session`` (see there for ``nodata_batch``).
 
     Replay knob: when ``spark.sswh.stream.maxFilesPerTrigger`` is set
     on ``spark``, it is passed through as the source's
