@@ -6,7 +6,7 @@ enough output groups a ``round(x, 4)`` eventually straddles a rounding
 boundary.  The fix used across the registry is EXACT accumulation:
 
   Spark side:   cast(round(sum(cast(x AS decimal(25,8))), 4) AS double)
-  DuckDB side:  CAST(round(sum(CAST(x AS DECIMAL(25,8))), 4) AS DOUBLE)
+  DuckDB side:  round(CAST(sum(CAST(x AS DECIMAL(25,8))) AS DECIMAL(38,8)), 4)::DOUBLE
 
 The double->decimal cast rounds the same value to the same 8 fractional
 digits in both engines (tie cases are measure-zero for computed
@@ -81,8 +81,16 @@ def davg(col: Column | str, ndigits: int = 4) -> Column:
 
 
 def sql_dsum(expr: str, ndigits: int = 4) -> str:
-    """DuckDB half of :func:`dsum` — keep textually adjacent in oracles."""
-    return f"CAST(round(sum(CAST({expr} AS DECIMAL(25,8))), {ndigits}) AS DOUBLE)"
+    """DuckDB half of :func:`dsum` — keep textually adjacent in oracles.
+
+    ``DECIMAL(38,8)`` is DuckDB's own type for this sum, named so the
+    round visibly takes the decimal; the postfix cast keeps the oracle
+    text's ``round(CAST(sum(`` prefix, which oracle test ids are cut from.
+    """
+    return (
+        f"round(CAST(sum(CAST({expr} AS DECIMAL(25,8))) AS DECIMAL(38,8)),"
+        f" {ndigits})::DOUBLE"
+    )
 
 
 def sql_davg(expr: str, ndigits: int = 4) -> str:
