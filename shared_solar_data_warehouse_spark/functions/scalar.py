@@ -540,7 +540,7 @@ def fn_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("fn_hash_spark", tags=("rows-only",))
+@op("fn_hash_spark")
 def fn_hash_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark-native hash family (xxhash64 is the engine's shuffle/
     bucketing hash — 10× cheaper than md5 for partition-key salting)."""
@@ -553,7 +553,7 @@ def fn_hash_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("fn_nondet", tags=("rows-only",))
+@op("fn_nondet")
 def fn_nondet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nondeterministic functions — excluded from oracle by nature; the
     output asserts their contracts as booleans (unique ids, rand in

@@ -237,7 +237,7 @@ def dedup_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("row_sample", tags=("rows-only",))
+@op("row_sample")
 def row_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded Bernoulli sample — rows-only (sampler RNG is engine-specific)."""
     return load_table(spark, sf_dir, "orders").sample(0.1, seed=42)

@@ -12,7 +12,7 @@ from __future__ import annotations
 import functools
 import importlib
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -26,8 +26,6 @@ class Op:
     name: str
     builder: Builder
     oracle: str | None  # DuckDB ANSI SQL, or None -> rows-only check
-    tags: tuple[str, ...] = field(default_factory=tuple)
-    doc: str = ""
 
 
 REGISTRY: dict[str, Op] = {}
@@ -52,9 +50,7 @@ _OP_MODULES = (
 )
 
 
-def op(
-    name: str, oracle: str | None = None, tags: tuple[str, ...] = (), doc: str = ""
-) -> Callable[[Builder], Builder]:
+def op(name: str, oracle: str | None = None) -> Callable[[Builder], Builder]:
     """Register a builder under ``name``; returns the builder unchanged.
 
     The builder must be a pure function of (spark, sf_dir) — no globals,
@@ -77,8 +73,6 @@ def op(
             name=name,
             builder=pinned,
             oracle=oracle.strip() if oracle else None,
-            tags=tuple(tags),
-            doc=doc or (builder.__doc__ or ""),
         )
         return builder
 
@@ -88,13 +82,7 @@ def op(
 def load_all_ops() -> dict[str, Op]:
     """Import every operator module (idempotent) and return the registry."""
     for module in _OP_MODULES:
-        try:
-            importlib.import_module(module)
-        except ModuleNotFoundError as exc:
-            # Tolerate not-yet-written modules during incremental build,
-            # but never swallow a typo inside an existing module.
-            if exc.name and not exc.name.startswith("shared_solar_data_warehouse_spark"):
-                raise
+        importlib.import_module(module)
     return REGISTRY
 
 

@@ -3,11 +3,17 @@ twins of the §2.8 batch analytics, exactly the reference's ingest shape
 (continuously-arriving gateway logs with late/out-of-order records).
 
 Oracle strategy: the driver's oracle is batch DuckDB, so every op here
-replays the static ``events`` parquet as a FILE STREAM, drains it with
-``trigger(availableNow=True)`` into a memory sink, and returns the
-final table — deterministic, so most entries are FULLY hash-checked
-against a batch SQL twin rather than merely rows-only (stronger than
-SURVEY §2.9 planned).
+replays the static ``events`` parquet as a FILE STREAM and runs it to
+its end with ``trigger(availableNow=True)`` — deterministic, so most
+entries are FULLY hash-checked against a batch SQL twin rather than
+merely rows-only (stronger than SURVEY §2.9 planned).
+
+A stream op is a pure function of its snapshot.  The source reads the
+snapshot's events table in place (``events_stream``); every query runs
+to its end through one of two helpers, ``drain`` (memory sink) or
+``_foreach_batch`` (the foreachBatch sinks, whose state fold is
+``_fold_state``); and each foreachBatch op starts from an empty scratch
+dir, so no checkpoint or state outlives the call that made it.
 
 The same physical plans run unchanged against a live directory/Kafka
 source with a processing-time trigger — that is the point of the
@@ -19,7 +25,8 @@ from __future__ import annotations
 
 import itertools
 import os
-import time
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -28,7 +35,7 @@ from pyspark.sql import types as T
 from shared_solar_data_warehouse_spark.parity import dsum, sql_dsum
 from shared_solar_data_warehouse_spark.registry import op
 from shared_solar_data_warehouse_spark.session import streaming_session
-from shared_solar_data_warehouse_spark.sources.io import scratch_dir, table_path
+from shared_solar_data_warehouse_spark.sources.io import scratch_dir
 
 _COUNTER = itertools.count()
 
@@ -49,27 +56,6 @@ _EVENTS_RAW_SCHEMA = T.StructType(
 _DUCK_EPOCH_S = "CAST(epoch(date_trunc('second', ts)) AS BIGINT)"
 
 
-def _stream_dir(sf_dir: str) -> str:
-    """File-stream sources want a DIRECTORY of data files.  A
-    real-scale events table already IS a parquet directory — use it
-    directly (the source lists its part files; a symlinked directory
-    would NOT be traversed).  The driver fixtures are single parquet
-    FILES, so those get staged into a per-sf scratch dir via symlink
-    (no copy).  The scratch dir is keyed by the snapshot's basename, so
-    a link left by another snapshot of the same basename — or one whose
-    target was deleted (dangling) — is re-pointed, never trusted."""
-    p = os.path.abspath(table_path(sf_dir, "events"))
-    if os.path.isdir(p):
-        return p
-    d = scratch_dir(sf_dir, "events_stream_src")
-    link = os.path.join(d, "events.parquet")
-    if os.path.lexists(link) and os.readlink(link) != p:
-        os.remove(link)
-    if not os.path.lexists(link):
-        os.symlink(p, link)
-    return d
-
-
 def events_stream(
     spark: SparkSession, sf_dir: str, *, nodata_batch: bool = True
 ) -> DataFrame:
@@ -84,13 +70,19 @@ def events_stream(
     micro-batch PER FILE instead of one shot, which is how
     tests/test_streaming.py replays every op over 3-batch (and
     out-of-order) arrival.  Unset (the default and the bench path) the
-    source drains everything in a single batch."""
+    source drains everything in a single batch.
+
+    The source loads the glob ``<sf_dir>/{events.parquet}``: Hadoop's
+    one-alternative brace glob matches only that name, whether it is a
+    single parquet file (the fixtures) or a directory of part files,
+    and a glob path spares a single file the file source's
+    must-be-a-directory check.  Nothing is staged."""
     session = streaming_session(spark, sf_dir, nodata_batch)
     reader = session.readStream.schema(_EVENTS_RAW_SCHEMA).format("parquet")
     mft = spark.conf.get("spark.sswh.stream.maxFilesPerTrigger", None)
     if mft:
         reader = reader.option("maxFilesPerTrigger", mft)
-    return reader.load(_stream_dir(sf_dir))
+    return reader.load(os.path.join(sf_dir, "{events.parquet}"))
 
 
 def drain(sdf: DataFrame, mode: str = "append") -> DataFrame:
@@ -115,6 +107,31 @@ def drain(sdf: DataFrame, mode: str = "append") -> DataFrame:
     result = session.table(name)
     session.catalog.dropTempView(name)
     return result
+
+
+def _foreach_batch(
+    sdf: DataFrame, base: str, fn: Callable[[DataFrame, int], None]
+) -> None:
+    """Run a streaming DataFrame to completion (availableNow), handing
+    each micro-batch to ``fn(batch_df, epoch_id)``; the checkpoint is
+    ``<base>/_ckpt``, so a restart on the same ``base`` resumes it."""
+    query = (
+        sdf.writeStream.foreachBatch(fn)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", os.path.join(base, "_ckpt"))
+        .start()
+    )
+    query.awaitTermination()
+
+
+def _empty_scratch(sf_dir: str, name: str) -> str:
+    """The op's scratch dir, emptied: a foreachBatch op keeps no
+    checkpoint or state from an earlier call (a kept checkpoint skips
+    every source file it has seen, even one rewritten in place)."""
+    base = scratch_dir(sf_dir, name)
+    shutil.rmtree(base, ignore_errors=True)
+    os.makedirs(base)
+    return base
 
 
 @op(
@@ -458,7 +475,7 @@ def stream_sink_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch id (idempotent per-epoch overwrite = exactly-once-ish), then
     the landed data is read back and aggregated in batch — the
     standard custom-sink escape hatch."""
-    out_dir = scratch_dir(sf_dir, "stream_foreachbatch")
+    out_dir = _empty_scratch(sf_dir, "stream_foreachbatch")
 
     def land(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(
@@ -468,44 +485,26 @@ def stream_sink_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = events_stream(spark, sf_dir).filter(F.col("value") > 50.0).select(
         "event_id", "event_type"
     )
-    query = (
-        s.writeStream.foreachBatch(land)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .start()
-    )
-    query.awaitTermination()
-    landed = spark.read.parquet(os.path.join(out_dir, "epoch=*"))
+    _foreach_batch(s, out_dir, land)
+    # Partition discovery adds an ``epoch`` column, which the aggregate
+    # ignores; ``_ckpt`` is skipped for its leading underscore.
+    landed = spark.read.parquet(out_dir)
     return landed.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
 
 
-@op("source_rate_stream", tags=("rows-only",))
+@op("source_rate_stream")
 def source_rate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic synthetic stream source (rate-micro-batch: fixed
-    rows per batch) — the load-generator used for soak tests; drained
-    for a bounded number of rows then stopped."""
-    session = streaming_session(spark, sf_dir)
-    name = f"sswh_rate_{os.getpid()}_{next(_COUNTER)}"
+    rows per batch) — the load-generator used for soak tests.  Under
+    ``availableNow`` the source emits exactly one 128-row batch."""
     s = (
-        session.readStream.format("rate-micro-batch")
+        streaming_session(spark, sf_dir)
+        .readStream.format("rate-micro-batch")
         .option("rowsPerBatch", 128)
         .option("startTimestamp", 0)
         .load()
     )
-    query = (
-        s.select("value")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    deadline = time.time() + 30
-    while time.time() < deadline and session.table(name).count() < 128:
-        time.sleep(0.2)
-    query.stop()
-    result = session.table(name).filter(F.col("value") < 128)
-    session.catalog.dropTempView(name)
-    return result
+    return drain(s.select("value"), "append").filter(F.col("value") < 128)
 
 
 @op(
@@ -595,7 +594,7 @@ def stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _recover_state_swap(base: str) -> str:
     """Crash-recovery preamble for the write-new-then-swap foreachBatch
-    state dirs (``stream_cdc_apply`` / ``stream_topk_snapshot``).
+    state dirs (``_fold_state``).
 
     The swap protocol is: write ``state_epoch_{e}`` (with an ``_epoch``
     stamp inside), ``rename(current -> current.old)``,
@@ -613,8 +612,6 @@ def _recover_state_swap(base: str) -> str:
 
     Returns the ``current`` path.
     """
-    import shutil
-
     cur = os.path.join(base, "current")
     old = cur + ".old"
     if not os.path.exists(cur) and os.path.exists(old):
@@ -643,8 +640,6 @@ def _commit_state_swap(base: str, nxt: str, epoch_id: int) -> None:
     stamp the epoch inside ``nxt`` (Spark ignores ``_``-prefixed files,
     like ``_SUCCESS``), then swap via the two-rename protocol whose
     crash windows ``_recover_state_swap`` repairs."""
-    import shutil
-
     with open(os.path.join(nxt, "_epoch"), "w") as fh:
         fh.write(str(epoch_id))
     cur = os.path.join(base, "current")
@@ -653,6 +648,56 @@ def _commit_state_swap(base: str, nxt: str, epoch_id: int) -> None:
         os.rename(cur, old)
     os.rename(nxt, cur)
     shutil.rmtree(old, ignore_errors=True)
+
+
+def _fold_state(
+    sdf: DataFrame, base: str, merge: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Fold a stream into a parquet state dir ``<base>/current`` and
+    return the final state.  Each micro-batch is reduced by ``merge``,
+    merged with the previous state by ``merge`` again, written as
+    ``state_epoch_{e}`` and promoted by ``_commit_state_swap``; the
+    fold first repairs a torn swap (``_recover_state_swap``) and skips
+    an epoch already committed (``_state_epoch``), so a replayed epoch
+    is never folded twice.  ``base`` is not emptied here: a restart on
+    the same ``base`` resumes its checkpoint and state."""
+    cur = os.path.join(base, "current")
+
+    def fold(batch_df: DataFrame, epoch_id: int) -> None:
+        _recover_state_swap(base)
+        if _state_epoch(cur) >= epoch_id:
+            return
+        b = merge(batch_df)
+        if os.path.exists(cur):
+            prev = batch_df.sparkSession.read.parquet(cur)
+            b = merge(prev.unionByName(b))
+        nxt = os.path.join(base, f"state_epoch_{epoch_id}")
+        b.write.mode("overwrite").parquet(nxt)
+        _commit_state_swap(base, nxt, epoch_id)
+
+    _foreach_batch(sdf, base, fold)
+    return sdf.sparkSession.read.parquet(cur)
+
+
+def _cdc_latest(df: DataFrame) -> DataFrame:
+    """One winner per user_id — the argmax on the (us, event_id) total
+    order — with the summed op count."""
+    return df.groupBy("user_id").agg(
+        F.max(F.struct("us", "event_id", "event_type", "value")).alias("last"),
+        F.sum("n_ops").cast("long").alias("n_ops"),
+    ).select(
+        "user_id",
+        F.col("last.us").alias("us"),
+        F.col("last.event_id").alias("event_id"),
+        F.col("last.event_type").alias("event_type"),
+        F.col("last.value").alias("value"),
+        "n_ops",
+    )
+
+
+def _top10(df: DataFrame) -> DataFrame:
+    """The 10 largest values, event_id breaking ties."""
+    return df.orderBy(F.col("value").desc(), F.col("event_id").desc()).limit(10)
 
 
 @op(
@@ -686,44 +731,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the per-batch merge shuffles only batch-keys ∪ state-keys; a
     real deployment would swap the parquet swap-dir for Delta/Iceberg
     MERGE INTO, same plan shape."""
-    import shutil
-
-    base = scratch_dir(sf_dir, "stream_cdc_apply")
-    # Fresh fold per invocation: stale state/checkpoint would double-count.
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
-    cur = os.path.join(base, "current")
-
-    def pick_latest(df: DataFrame) -> DataFrame:
-        return df.groupBy("user_id").agg(
-            F.max(
-                F.struct("us", "event_id", "event_type", "value")
-            ).alias("last"),
-            F.sum("n_ops").cast("long").alias("n_ops"),
-        ).select(
-            "user_id",
-            F.col("last.us").alias("us"),
-            F.col("last.event_id").alias("event_id"),
-            F.col("last.event_type").alias("event_type"),
-            F.col("last.value").alias("value"),
-            "n_ops",
-        )
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # Crash-safe at-least-once fold: repair any torn swap from a
-        # prior crash, and skip epochs already committed into the
-        # snapshot (replaying one would double-count sum(n_ops)).
-        _recover_state_swap(base)
-        if _state_epoch(cur) >= epoch_id:
-            return
-        b = pick_latest(batch_df)
-        if os.path.exists(cur):
-            prev = batch_df.sparkSession.read.parquet(cur)
-            b = pick_latest(prev.unionByName(b))
-        nxt = os.path.join(base, f"state_epoch_{epoch_id}")
-        b.write.mode("overwrite").parquet(nxt)
-        _commit_state_swap(base, nxt, epoch_id)
-
     feed = events_stream(spark, sf_dir).select(
         "user_id",
         F.unix_micros("ts").alias("us"),
@@ -732,14 +739,8 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.lit(1).alias("n_ops"),
     )
-    query = (
-        feed.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(base, "_ckpt"))
-        .start()
-    )
-    query.awaitTermination()
-    state = spark.read.parquet(cur)
+    base = _empty_scratch(sf_dir, "stream_cdc_apply")
+    state = _fold_state(feed, base, _cdc_latest)
     return state.filter(F.col("event_type") != "error").select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
@@ -768,47 +769,13 @@ def stream_topk_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs (per-batch partial top-k is associative and commutative, so
     batch ARRIVAL order cannot change the answer; RE-DELIVERED epochs
     would double-count and are fenced by the _epoch stamp instead —
-    the fold itself is not replay-idempotent).  State lands via the same atomic
-    write-new-then-swap parquet dir as the CDC op; the oracle is the
-    batch LIMIT with the identical tie-break."""
-    import shutil
-
-    base = scratch_dir(sf_dir, "stream_topk_snapshot")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
-    cur = os.path.join(base, "current")
-
-    def topk(df: DataFrame) -> DataFrame:
-        return df.orderBy(F.col("value").desc(), F.col("event_id").desc()).limit(10)
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        # Same crash-safe swap discipline as stream_cdc_apply.  The
-        # fold is NOT idempotent under replay: a replayed epoch would
-        # union rows already folded into the persisted top-10, and
-        # limit(10) can then seat the same (event_id, value) row twice,
-        # displacing a legitimate entry — so the _epoch stamp guard is
-        # load-bearing here too, and the recovery preamble is what
-        # makes a crash between the two swap renames survivable.
-        _recover_state_swap(base)
-        if _state_epoch(cur) >= epoch_id:
-            return
-        b = topk(batch_df.select("event_id", "value"))
-        if os.path.exists(cur):
-            prev = batch_df.sparkSession.read.parquet(cur)
-            b = topk(prev.unionByName(b))
-        nxt = os.path.join(base, f"state_epoch_{epoch_id}")
-        b.write.mode("overwrite").parquet(nxt)
-        _commit_state_swap(base, nxt, epoch_id)
-
+    the fold itself is not replay-idempotent).  State lands through
+    ``_fold_state``, the same atomic write-new-then-swap parquet dir as
+    the CDC op; the oracle is the batch LIMIT with the identical
+    tie-break."""
     s = events_stream(spark, sf_dir).select("event_id", "value")
-    query = (
-        s.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(base, "_ckpt"))
-        .start()
-    )
-    query.awaitTermination()
-    state = spark.read.parquet(cur)
+    base = _empty_scratch(sf_dir, "stream_topk_snapshot")
+    state = _fold_state(s, base, _top10)
     w = Window.orderBy(F.col("value").desc(), F.col("event_id").desc())
     return state.select(
         F.row_number().over(w).cast("bigint").alias("rank"), "event_id", "value"

@@ -435,90 +435,6 @@ def test_stream_ewma_matches_batch_twin(spark, registry):
 # pre- or post-batch, never torn, never double-counted.
 
 
-def _cdc_twin_parts(spark, src: str, base: str):
-    """Test-local twin of stream_cdc_apply's fold, calling the op's REAL
-    swap helpers (same module code paths), with an injectable fault."""
-    from shared_solar_data_warehouse_spark.streaming.streams import (
-        _EVENTS_RAW_SCHEMA,
-        _commit_state_swap,
-        _recover_state_swap,
-        _state_epoch,
-    )
-
-    cur = os.path.join(base, "current")
-
-    def pick_latest(df):
-        return (
-            df.groupBy("user_id")
-            .agg(
-                F.max(
-                    F.struct("us", "event_id", "event_type", "value")
-                ).alias("last"),
-                F.sum("n_ops").cast("long").alias("n_ops"),
-            )
-            .select(
-                "user_id",
-                F.col("last.us").alias("us"),
-                F.col("last.event_id").alias("event_id"),
-                F.col("last.event_type").alias("event_type"),
-                F.col("last.value").alias("value"),
-                "n_ops",
-            )
-        )
-
-    fault = {"arm_epoch": None, "kind": None}
-
-    def apply_batch(batch_df, epoch_id):
-        _recover_state_swap(base)
-        if _state_epoch(cur) >= epoch_id:
-            return
-        b = pick_latest(batch_df)
-        if os.path.exists(cur):
-            prev = batch_df.sparkSession.read.parquet(cur)
-            b = pick_latest(prev.unionByName(b))
-        nxt = os.path.join(base, f"state_epoch_{epoch_id}")
-        b.write.mode("overwrite").parquet(nxt)
-        if fault["arm_epoch"] == epoch_id and fault["kind"] == "torn_swap":
-            # crash BETWEEN the two renames: perform only the first.
-            fault["arm_epoch"] = None
-            with open(os.path.join(nxt, "_epoch"), "w") as fh:
-                fh.write(str(epoch_id))
-            if os.path.exists(cur):
-                os.rename(cur, cur + ".old")
-            raise RuntimeError("injected crash between state renames")
-        _commit_state_swap(base, nxt, epoch_id)
-        if fault["arm_epoch"] == epoch_id and fault["kind"] == "post_commit":
-            # crash AFTER the swap but BEFORE the checkpoint commit:
-            # Spark will replay this epoch on restart (at-least-once).
-            fault["arm_epoch"] = None
-            raise RuntimeError("injected crash after state commit")
-
-    def run(ckpt):
-        feed = (
-            spark.readStream.schema(_EVENTS_RAW_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-            .select(
-                "user_id",
-                F.unix_micros("ts").alias("us"),
-                "event_id",
-                "event_type",
-                "value",
-                F.lit(1).alias("n_ops"),
-            )
-        )
-        q = (
-            feed.writeStream.foreachBatch(apply_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    return run, fault, cur
-
-
 def _cdc_batch_oracle(spark, src: str):
     """Exact batch twin over all replayed rows: latest op per key with a
     total op count, tombstones (event_type='error') absent."""
@@ -551,27 +467,53 @@ def _cdc_batch_oracle(spark, src: str):
 
 @pytest.mark.parametrize("kind", ["torn_swap", "post_commit"])
 def test_swap_sink_crash_injection_recovers_consistent(
-    spark, replay_ordered_sf, kind
+    spark, replay_ordered_sf, three_batch_mode, monkeypatch, kind
 ):
+    """Drive the op's own fold (``_fold_state`` with ``_cdc_latest``,
+    stream_cdc_apply's merge) over the 3-batch replay, crash it while
+    committing the SECOND batch — so real pre-crash state exists and a
+    post-crash batch still follows — and restart it on the same base."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from shared_solar_data_warehouse_spark.sources.io import table_path
+    from shared_solar_data_warehouse_spark.streaming import streams
 
     base = os.path.join(REPLAY_BASE, f"swap_fault_{kind}")
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base)
     src = table_path(replay_ordered_sf, "events")
-    ckpt = os.path.join(base, "_ckpt")
+    feed = streams.events_stream(spark, replay_ordered_sf).select(
+        "user_id",
+        F.unix_micros("ts").alias("us"),
+        "event_id",
+        "event_type",
+        "value",
+        F.lit(1).alias("n_ops"),
+    )
+    commit = streams._commit_state_swap
 
-    run, fault, cur = _cdc_twin_parts(spark, src, os.path.join(base, "state"))
-    os.makedirs(os.path.join(base, "state"))
+    def faulty(base_, nxt, epoch_id):
+        if epoch_id != 1:
+            return commit(base_, nxt, epoch_id)
+        if kind == "torn_swap":
+            # crash BETWEEN the two renames: perform only the first.
+            with open(os.path.join(nxt, "_epoch"), "w") as fh:
+                fh.write(str(epoch_id))
+            cur = os.path.join(base_, "current")
+            if os.path.exists(cur):
+                os.rename(cur, cur + ".old")
+            raise RuntimeError("injected crash between state renames")
+        # crash AFTER the swap but BEFORE the checkpoint commit: Spark
+        # replays this epoch on restart (at-least-once).
+        commit(base_, nxt, epoch_id)
+        raise RuntimeError("injected crash after state commit")
 
-    # Crash while folding the SECOND of three micro-batches, so real
-    # pre-crash state exists and a post-crash batch still follows.
-    fault["arm_epoch"], fault["kind"] = 1, kind
-    with pytest.raises(StreamingQueryException):
-        run(ckpt)
+    with monkeypatch.context() as m:
+        m.setattr(streams, "_commit_state_swap", faulty)
+        with pytest.raises(StreamingQueryException):
+            streams._fold_state(feed, base, streams._cdc_latest)
 
+    cur = os.path.join(base, "current")
     old = cur + ".old"
     if kind == "torn_swap":
         # The crash left the torn window the old protocol could not
@@ -583,17 +525,15 @@ def test_swap_sink_crash_injection_recovers_consistent(
         epoch_file = os.path.join(cur, "_epoch")
         assert open(epoch_file).read().strip() == "1"
 
-    # Restart from the SAME checkpoint with the fault disarmed: the
-    # interrupted epoch replays (at-least-once), recovery repairs the
-    # torn swap / the _epoch stamp suppresses the double-fold, and the
-    # remaining batch drains.
-    run(ckpt)
+    # Restart on the SAME base (its checkpoint and state) with the real
+    # commit: the interrupted epoch replays (at-least-once), recovery
+    # repairs the torn swap / the _epoch stamp suppresses the
+    # double-fold, and the remaining batch drains.
+    state = streams._fold_state(feed, base, streams._cdc_latest)
     assert os.path.exists(cur) and not os.path.exists(old)
 
-    got = (
-        spark.read.parquet(cur)
-        .filter(F.col("event_type") != "error")
-        .select("user_id", "us", "event_id", "value", "n_ops")
+    got = state.filter(F.col("event_type") != "error").select(
+        "user_id", "us", "event_id", "value", "n_ops"
     )
     want = _cdc_batch_oracle(spark, src)
     # Exact parity INCLUDING n_ops: a replayed epoch folded twice would
@@ -668,58 +608,73 @@ def test_swap_helpers_all_crash_prefixes(tmp_path):
 
 
 def _stage_snapshot(root, n_rows: int | None = None) -> str:
-    """A snapshot dir holding only an events FILE (the fixture's, or its
-    first ``n_rows`` rows) — what ``_stream_dir`` stages by symlink."""
-    import pyarrow.parquet as pq
+    """A snapshot dir: the fixture's other tables linked in, and an
+    events FILE holding the fixture's events (or their first
+    ``n_rows`` rows)."""
+    from shared_solar_data_warehouse_spark.sources.io import TABLES, table_path
 
     os.makedirs(root)
-    table = pq.read_table(os.path.join(SF_SMALL, "events.parquet"))
-    if n_rows is not None:
-        table = table.slice(0, n_rows)
-    pq.write_table(table, os.path.join(root, "events.parquet"))
+    for name in TABLES:
+        if name != "events":
+            os.symlink(table_path(SF_SMALL, name), table_path(str(root), name))
+    _write_events(str(root), n_rows)
     return str(root)
 
 
-def test_stream_dir_repoints_reused_basename(spark, tmp_path):
+def _write_events(snap: str, n_rows: int | None) -> None:
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(os.path.join(SF_SMALL, "events.parquet"))
+    if n_rows is not None:
+        table = table.slice(0, n_rows)
+    pq.write_table(table, os.path.join(snap, "events.parquet"))
+
+
+def _sink_passes(spark, registry, snap: str) -> None:
+    from shared_solar_data_warehouse_spark.mirror import duck_connect, run_op
+
+    o = registry["stream_sink_foreachbatch"]
+    res = run_op(spark, duck_connect(snap), o.name, o.builder, o.oracle, snap)
+    assert res["status"] == "PASS", res
+
+
+def test_reused_basename_streams_the_second_snapshot(spark, registry, tmp_path):
     """Two snapshots with one basename under different parents share a
-    scratch link; the second must stream ITS events, not the first's."""
+    scratch dir; streams on the second read ITS events, not the
+    first's — through a drain and through the foreachBatch sink."""
+    from shared_solar_data_warehouse_spark.sources.io import scratch_root
     from shared_solar_data_warehouse_spark.streaming.streams import (
-        _stream_dir,
         drain,
         events_stream,
     )
 
-    base = f"sswh_stream_dir_reuse_{os.getpid()}"
+    base = f"sswh_stream_reuse_{os.getpid()}"
     first = _stage_snapshot(tmp_path / "a" / base)
     second = _stage_snapshot(tmp_path / "b" / base, n_rows=100)
-    staged = _stream_dir(first)
     try:
-        link = os.path.join(staged, "events.parquet")
-        assert os.readlink(link) == os.path.join(first, "events.parquet")
-        assert _stream_dir(second) == staged
-        assert os.readlink(link) == os.path.join(second, "events.parquet")
+        _sink_passes(spark, registry, first)
+        _sink_passes(spark, registry, second)
         assert drain(events_stream(spark, second)).count() == 100
     finally:
-        shutil.rmtree(os.path.dirname(staged), ignore_errors=True)
+        shutil.rmtree(os.path.join(scratch_root(), base), ignore_errors=True)
 
 
-def test_stream_dir_replaces_dangling_link(tmp_path):
-    """A link whose snapshot was deleted is dangling: ``os.path.exists``
-    calls it absent, so a plain re-link would raise FileExistsError."""
-    from shared_solar_data_warehouse_spark.streaming.streams import _stream_dir
+def test_sink_foreachbatch_sees_events_rewritten_in_place(
+    spark, registry, tmp_path
+):
+    """A snapshot's events file rewritten in place is a new source: the
+    foreachBatch sink must land and count the new rows, not skip the
+    path as already seen by an earlier call's checkpoint."""
+    from shared_solar_data_warehouse_spark.sources.io import scratch_root
 
-    base = f"sswh_stream_dir_dangling_{os.getpid()}"
-    gone = _stage_snapshot(tmp_path / "a" / base)
-    staged = _stream_dir(gone)
+    base = f"sswh_stream_rewrite_{os.getpid()}"
+    snap = _stage_snapshot(tmp_path / base)
     try:
-        shutil.rmtree(gone)
-        link = os.path.join(staged, "events.parquet")
-        assert os.path.islink(link) and not os.path.exists(link)
-        fresh = _stage_snapshot(tmp_path / "b" / base)
-        assert _stream_dir(fresh) == staged
-        assert os.readlink(link) == os.path.join(fresh, "events.parquet")
+        _sink_passes(spark, registry, snap)
+        _write_events(snap, 100)
+        _sink_passes(spark, registry, snap)
     finally:
-        shutil.rmtree(os.path.dirname(staged), ignore_errors=True)
+        shutil.rmtree(os.path.join(scratch_root(), base), ignore_errors=True)
 
 
 def test_drains_never_change_caller_session_confs(spark, registry):
