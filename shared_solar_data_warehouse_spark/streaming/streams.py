@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import re
 import shutil
 from collections.abc import Callable
 
@@ -76,13 +77,16 @@ def events_stream(
     one-alternative brace glob matches only that name, whether it is a
     single parquet file (the fixtures) or a directory of part files,
     and a glob path spares a single file the file source's
-    must-be-a-directory check.  Nothing is staged."""
+    must-be-a-directory check.  Nothing is staged.  Glob metacharacters
+    in ``sf_dir`` itself are escaped: unescaped, a snapshot named
+    ``snap[1]`` would silently stream its sibling ``snap1``."""
     session = streaming_session(spark, sf_dir, nodata_batch)
     reader = session.readStream.schema(_EVENTS_RAW_SCHEMA).format("parquet")
     mft = spark.conf.get("spark.sswh.stream.maxFilesPerTrigger", None)
     if mft:
         reader = reader.option("maxFilesPerTrigger", mft)
-    return reader.load(os.path.join(sf_dir, "{events.parquet}"))
+    root = re.sub(r"([\\\[\]{}*?])", r"\\\1", sf_dir)
+    return reader.load(os.path.join(root, "{events.parquet}"))
 
 
 def drain(sdf: DataFrame, mode: str = "append") -> DataFrame:

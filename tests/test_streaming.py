@@ -659,6 +659,22 @@ def test_reused_basename_streams_the_second_snapshot(spark, registry, tmp_path):
         shutil.rmtree(os.path.join(scratch_root(), base), ignore_errors=True)
 
 
+def test_stream_source_escapes_glob_characters(spark, tmp_path):
+    """A snapshot path holding glob metacharacters streams its own
+    events: unescaped, ``snap[1]`` would match its sibling ``snap1``."""
+    import pyarrow.parquet as pq
+
+    from shared_solar_data_warehouse_spark.streaming.streams import (
+        drain,
+        events_stream,
+    )
+
+    snap = _stage_snapshot(tmp_path / "snap[1]")
+    _stage_snapshot(tmp_path / "snap1", n_rows=100)
+    n_rows = pq.read_metadata(os.path.join(snap, "events.parquet")).num_rows
+    assert drain(events_stream(spark, snap)).count() == n_rows != 100
+
+
 def test_sink_foreachbatch_sees_events_rewritten_in_place(
     spark, registry, tmp_path
 ):
