@@ -34,8 +34,9 @@ from shared_solar_data_warehouse_spark.sources.io import load_table
 _DAMP = 0.85
 _UNIT = 1_000_000_000_000_000.0  # 1e15 quantization grid for contributions
 
-#: Node cap for graph_triangle_count's driver bitmap regime: the packed
-#: adjacency is n^2/8 bytes (32768 -> 134 MB).  An edge cap alone is NOT
+#: Node cap for the triangle ops' driver bitmap regime
+#: (``_dense_common_neighbors``): the packed adjacency is n^2/8 bytes
+#: (32768 -> 134 MB).  An edge cap alone is NOT
 #: sufficient — a sparse 2M-edge graph can span millions of nodes.
 DENSE_MAX_NODES = 32_768
 _ROUNDS = 3
@@ -308,6 +309,60 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _dense_common_neighbors(
+    pairs: DataFrame, n_edges: int, undirected: bool
+) -> tuple | None:
+    """Driver regime of the triangle ops on a small dense graph: collect
+    the edge list ``pairs`` (u < v), index its nodes, pack each node's
+    neighbor set into a packed |V|×⌈|V|/8⌉ uint8 bitmap
+    (``np.bitwise_or.at`` — no |V|² bool intermediate; out-neighbors
+    only, or both directions when ``undirected``), and popcount
+    ``row[u] & row[v]`` per edge in bounded chunks (the gather is
+    chunk×⌈|V|/8⌉, never E×⌈|V|/8⌉).
+
+    Returns ``(node_ids, ui, vi, common)`` — the sorted node ids, each
+    edge's endpoint indexes and its common-neighbor count — or None
+    past either gate: ``dedup.DRIVER_CC_MAX_EDGES`` edges, or
+    ``DENSE_MAX_NODES`` nodes (the bitmap is |V|²/8 bytes, and a sparse
+    graph inside the edge cap can span millions of nodes).  Both gates
+    are read at call time, so a test can force the distributed regime."""
+    from shared_solar_data_warehouse_spark.operators import dedup
+
+    if n_edges > dedup.DRIVER_CC_MAX_EDGES:
+        return None
+    import numpy as np
+    import pandas as pd
+
+    edges_pd = pairs.toPandas()
+    u, v = edges_pd["u"].to_numpy(), edges_pd["v"].to_numpy()
+    node_ids = np.unique(np.concatenate([u, v]))
+    n = len(node_ids)
+    if n > DENSE_MAX_NODES:
+        return None
+    idx = pd.Series(np.arange(n), index=node_ids)
+    ui, vi = idx[u].to_numpy(), idx[v].to_numpy()
+    nbytes = (n + 7) // 8
+    packed = np.zeros((n, nbytes), dtype=np.uint8)
+    for rows, cols in ((ui, vi), (vi, ui)) if undirected else ((ui, vi),):
+        np.bitwise_or.at(
+            packed,
+            (rows, cols >> 3),
+            np.left_shift(np.uint8(1), (7 - (cols & 7)).astype(np.uint8)),
+        )
+    # uint8 popcount table: the table lookup result then stays uint8
+    # (chunk x nbytes, same size as the gather) instead of int64 (8x the
+    # memory traffic — measured 12x slower); the reduction itself widens
+    # via sum(dtype=int64).
+    pop = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(1)
+    pop = pop.astype(np.uint8)
+    common = np.zeros(len(ui), dtype=np.int64)
+    chunk = max(1, (64 << 20) // max(1, nbytes))  # ≤64 MB gather
+    for lo in range(0, len(ui), chunk):
+        sl = slice(lo, lo + chunk)
+        common[sl] = pop[packed[ui[sl]] & packed[vi[sl]]].sum(axis=1, dtype=np.int64)
+    return node_ids, ui, vi, common
+
+
 @op(
     "graph_triangle_count",
     oracle="""
@@ -339,16 +394,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     * **Small dense graph** (≤ DRIVER_CC_MAX_EDGES after the distinct
       — a 2M-edge list is ~32 MB — AND ≤ DENSE_MAX_NODES distinct
-      nodes, because the bitmap is |V|²/8 bytes: a sparse 2M-edge
-      graph can have 4M nodes, which would be a 2 TB matrix — the
-      round-1 bug, gate was edges-only): collect the oriented edge
-      list, pack each node's out-neighbor set directly into a packed
-      |V|×⌈|V|/8⌉ uint8 bitmap (``np.bitwise_or.at`` — no |V|² bool
-      intermediate), and popcount ``row[u] & row[v]`` over edges in
-      bounded chunks (the edge-indexed gather is chunk×⌈|V|/8⌉, never
-      E×⌈|V|/8⌉) — each triangle {u<v<w} is counted exactly once at
-      its smallest-id edge.  Milliseconds, zero shuffles beyond the
-      edge distinct.
+      nodes): ``_dense_common_neighbors`` popcounts ``row[u] & row[v]``
+      over the packed out-neighbor bitmap — each triangle {u<v<w} is
+      counted exactly once at its smallest-id edge.  Milliseconds,
+      zero shuffles beyond the edge distinct.
     * **Large graph**: per-edge neighborhood intersection, fully
       distributed — build each node's sorted out-neighbor array,
       broadcast it to both endpoints, sum
@@ -365,45 +414,13 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     n_edges = pairs.count()
-    if n_edges <= DRIVER_CC_MAX_EDGES:
-        import numpy as np
-
-        import pandas as pd
-
-        edges_pd = pairs.toPandas()
-        node_ids = np.unique(
-            np.concatenate([edges_pd["u"].to_numpy(), edges_pd["v"].to_numpy()])
+    dense = _dense_common_neighbors(pairs, n_edges, undirected=False)
+    if dense is not None:
+        node_ids, _, _, common = dense
+        return spark.createDataFrame(
+            [(len(node_ids), int(n_edges), int(common.sum()))],
+            "n_nodes long, n_edges long, n_triangles long",
         )
-        n = len(node_ids)
-        if n <= DENSE_MAX_NODES:  # bitmap is n^2/8 bytes — gate on NODES
-            idx = pd.Series(np.arange(n), index=node_ids)
-            ui = idx[edges_pd["u"].to_numpy()].to_numpy()
-            vi = idx[edges_pd["v"].to_numpy()].to_numpy()
-            nbytes = (n + 7) // 8
-            packed = np.zeros((n, nbytes), dtype=np.uint8)
-            np.bitwise_or.at(
-                packed,
-                (ui, vi >> 3),
-                np.left_shift(np.uint8(1), (7 - (vi & 7)).astype(np.uint8)),
-            )
-            # uint8 popcount table: the table lookup result then stays
-            # uint8 (chunk x nbytes, same size as the gather) instead of
-            # int64 (8x the memory traffic — measured 12x slower); the
-            # reduction itself widens via sum(dtype=int64).
-            pop = np.unpackbits(
-                np.arange(256, dtype=np.uint8)[:, None], axis=1
-            ).sum(1).astype(np.uint8)
-            n_tri = 0
-            chunk = max(1, (64 << 20) // max(1, nbytes))  # ≤64 MB gather
-            for lo in range(0, len(ui), chunk):
-                sl = slice(lo, lo + chunk)
-                n_tri += int(
-                    pop[packed[ui[sl]] & packed[vi[sl]]].sum(dtype=np.int64)
-                )
-            return spark.createDataFrame(
-                [(int(n), int(n_edges), n_tri)],
-                "n_nodes long, n_edges long, n_triangles long",
-            )
 
     adj = pairs.groupBy("u").agg(F.sort_array(F.collect_set("v")).alias("nbrs"))
     au = adj.select(F.col("u").alias("au"), F.col("nbrs").alias("nbrs_u"))
@@ -1061,66 +1078,33 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = memo_checkpoint(
         spark, sf_dir, "co_supplier_pairs", lambda: _co_supplier_pairs(spark, sf_dir)
     )
-    from shared_solar_data_warehouse_spark.operators.dedup import (
-        DRIVER_CC_MAX_EDGES,
-    )
-
-    n_edges = pairs.count()
-    if n_edges <= DRIVER_CC_MAX_EDGES:
+    dense = _dense_common_neighbors(pairs, pairs.count(), undirected=True)
+    if dense is not None:
         import numpy as np
-
         import pandas as pd
 
-        edges_pd = pairs.toPandas()
-        node_ids = np.unique(
-            np.concatenate([edges_pd["u"].to_numpy(), edges_pd["v"].to_numpy()])
-        )
+        node_ids, ui, vi, common = dense
         n = len(node_ids)
-        if n <= DENSE_MAX_NODES:
-            idx = pd.Series(np.arange(n), index=node_ids)
-            ui = idx[edges_pd["u"].to_numpy()].to_numpy()
-            vi = idx[edges_pd["v"].to_numpy()].to_numpy()
-            nbytes = (n + 7) // 8
-            und = np.zeros((n, nbytes), dtype=np.uint8)
-            for rows, cols in ((ui, vi), (vi, ui)):
-                np.bitwise_or.at(
-                    und,
-                    (rows, cols >> 3),
-                    np.left_shift(
-                        np.uint8(1), (7 - (cols & 7)).astype(np.uint8)
-                    ),
-                )
-            pop = np.unpackbits(
-                np.arange(256, dtype=np.uint8)[:, None], axis=1
-            ).sum(1).astype(np.uint8)
-            t2 = np.zeros(n, dtype=np.int64)
-            chunk = max(1, (64 << 20) // max(1, nbytes))
-            for lo in range(0, len(ui), chunk):
-                sl = slice(lo, lo + chunk)
-                c = pop[und[ui[sl]] & und[vi[sl]]].sum(
-                    axis=1, dtype=np.int64
-                )
-                np.add.at(t2, ui[sl], c)
-                np.add.at(t2, vi[sl], c)
-            deg = np.bincount(
-                np.concatenate([ui, vi]), minlength=n
-            ).astype(np.int64)
-            keep = deg >= 2
-            out = pd.DataFrame(
-                {
-                    "supp_node": node_ids[keep],
-                    "degree": deg[keep],
-                    "n_triangles": t2[keep] // 2,
-                    "clustering_ppm": t2[keep]
-                    * 1_000_000
-                    // (deg[keep] * (deg[keep] - 1)),
-                }
-            )
-            return spark.createDataFrame(
-                out,
-                "supp_node long, degree long, n_triangles long,"
-                " clustering_ppm long",
-            )
+        t2 = np.zeros(n, dtype=np.int64)
+        np.add.at(t2, ui, common)
+        np.add.at(t2, vi, common)
+        deg = np.bincount(np.concatenate([ui, vi]), minlength=n).astype(np.int64)
+        keep = deg >= 2
+        out = pd.DataFrame(
+            {
+                "supp_node": node_ids[keep],
+                "degree": deg[keep],
+                "n_triangles": t2[keep] // 2,
+                "clustering_ppm": t2[keep]
+                * 1_000_000
+                // (deg[keep] * (deg[keep] - 1)),
+            }
+        )
+        return spark.createDataFrame(
+            out,
+            "supp_node long, degree long, n_triangles long,"
+            " clustering_ppm long",
+        )
 
     und = pairs.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
         pairs.select(F.col("v").alias("node"), F.col("u").alias("nbr"))

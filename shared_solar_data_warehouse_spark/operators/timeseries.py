@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from shared_solar_data_warehouse_spark.materialize import memo_checkpoint
 from shared_solar_data_warehouse_spark.parity import (
     DEC,
+    DUCK_EPOCH_S,
     EXP_K,
     EXP_KLN2,
     EXP_P2K,
@@ -155,14 +156,11 @@ def ts_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DUCK_EPOCH_S = "CAST(epoch(date_trunc('second', ts)) AS BIGINT)"
-
-
 @op(
     "ts_delta",
     oracle=f"""
     SELECT user_id, event_id,
-           {_DUCK_EPOCH_S} - lag({_DUCK_EPOCH_S}) OVER w AS gap_seconds,
+           {DUCK_EPOCH_S} - lag({DUCK_EPOCH_S}) OVER w AS gap_seconds,
            round(value - lag(value) OVER w, 4) AS value_delta
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -188,7 +186,7 @@ def ts_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id, event_id, gap_seconds
     FROM (
         SELECT user_id, event_id,
-               {_DUCK_EPOCH_S} - lag({_DUCK_EPOCH_S}) OVER (
+               {DUCK_EPOCH_S} - lag({DUCK_EPOCH_S}) OVER (
                    PARTITION BY user_id ORDER BY ts, event_id) AS gap_seconds
         FROM events
     ) WHERE gap_seconds > 7200
@@ -307,9 +305,9 @@ def ts_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH flagged AS (
         SELECT user_id, event_id, value,
-               {_DUCK_EPOCH_S} AS es,
-               CASE WHEN {_DUCK_EPOCH_S} - lag({_DUCK_EPOCH_S}) OVER w > 1800
-                    OR lag({_DUCK_EPOCH_S}) OVER w IS NULL
+               {DUCK_EPOCH_S} AS es,
+               CASE WHEN {DUCK_EPOCH_S} - lag({DUCK_EPOCH_S}) OVER w > 1800
+                    OR lag({DUCK_EPOCH_S}) OVER w IS NULL
                     THEN 1 ELSE 0 END AS is_new
         FROM events
         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -373,17 +371,17 @@ def ts_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_funnel",
     oracle=f"""
     WITH s AS (
-        SELECT user_id, min({_DUCK_EPOCH_S}) AS t_signup
+        SELECT user_id, min({DUCK_EPOCH_S}) AS t_signup
         FROM events WHERE event_type = 'signup' GROUP BY user_id
     ), c AS (
-        SELECT e.user_id, min({_DUCK_EPOCH_S}) AS t_click
+        SELECT e.user_id, min({DUCK_EPOCH_S}) AS t_click
         FROM events e JOIN s ON e.user_id = s.user_id
-        WHERE e.event_type = 'click' AND {_DUCK_EPOCH_S} >= s.t_signup
+        WHERE e.event_type = 'click' AND {DUCK_EPOCH_S} >= s.t_signup
         GROUP BY e.user_id
     ), p AS (
-        SELECT e.user_id, min({_DUCK_EPOCH_S}) AS t_purchase
+        SELECT e.user_id, min({DUCK_EPOCH_S}) AS t_purchase
         FROM events e JOIN c ON e.user_id = c.user_id
-        WHERE e.event_type = 'purchase' AND {_DUCK_EPOCH_S} >= c.t_click
+        WHERE e.event_type = 'purchase' AND {DUCK_EPOCH_S} >= c.t_click
         GROUP BY e.user_id
     )
     SELECT s.user_id, s.t_signup, c.t_click, p.t_purchase,
@@ -885,7 +883,7 @@ def ts_interp_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH deltas AS (
         SELECT user_id,
                CAST(date_trunc('day', ts) AS DATE) AS day,
-               {_DUCK_EPOCH_S} - lag({_DUCK_EPOCH_S}) OVER (
+               {DUCK_EPOCH_S} - lag({DUCK_EPOCH_S}) OVER (
                    PARTITION BY user_id ORDER BY ts, event_id) AS gap_s
         FROM events
     )
@@ -1084,7 +1082,7 @@ def ts_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(date_trunc('day', ts) AS DATE) AS day,
                value,
                lag(value) OVER w AS prev_value,
-               {_DUCK_EPOCH_S} - lag({_DUCK_EPOCH_S}) OVER w AS gap_s
+               {DUCK_EPOCH_S} - lag({DUCK_EPOCH_S}) OVER w AS gap_s
         FROM events
         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     )
@@ -1208,7 +1206,7 @@ def ts_coincidence_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_credit_reconciliation",
     oracle=f"""
     WITH b AS (
-        SELECT user_id, event_id, {_DUCK_EPOCH_S} AS es,
+        SELECT user_id, event_id, {DUCK_EPOCH_S} AS es,
                CAST(sum(CAST(CASE WHEN event_type = 'purchase' THEN value
                                   ELSE -0.1 * value END AS DECIMAL(25,8))) OVER (
                    PARTITION BY user_id ORDER BY ts, event_id
@@ -3916,14 +3914,14 @@ ATTRIB_WINDOW_S = 7 * 86_400
                                THEN event_type END IGNORE NULLS)
                    OVER w AS touch_type,
                last_value(CASE WHEN event_type IN ('click', 'view')
-                               THEN {_DUCK_EPOCH_S} END IGNORE NULLS)
+                               THEN {DUCK_EPOCH_S} END IGNORE NULLS)
                    OVER w AS touch_es
         FROM events
         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     )
     SELECT CASE WHEN touch_type IS NOT NULL
-                     AND {_DUCK_EPOCH_S} - touch_es <= {ATTRIB_WINDOW_S}
+                     AND {DUCK_EPOCH_S} - touch_es <= {ATTRIB_WINDOW_S}
                 THEN touch_type ELSE 'direct' END AS channel,
            CAST(count(*) AS BIGINT) AS n_purchases,
            CAST(sum(cents) AS BIGINT) AS attributed_cents
@@ -3944,7 +3942,7 @@ def ts_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shape join_asof documents as its merged-stream twin.
     Lookback enforced on TRUNCATED whole epoch seconds on both engines
     (Spark unix_timestamp truncates sub-second parts; the oracle uses
-    the module-wide _DUCK_EPOCH_S = epoch(date_trunc('second', ts)) so
+    parity.DUCK_EPOCH_S = epoch(date_trunc('second', ts)) so
     a gap within 1s of the 7-day boundary cannot classify differently
     across engines — ADVICE r5); credit summed in exact cents.  At 100 TB: one hash exchange on user_id, linear window
     scan per user, then a channel-bounded aggregate (≤3 rows)."""

@@ -133,6 +133,12 @@ def sql_dround(expr: str, ndigits: int = 6) -> str:
     return f"floor(({expr}) * {scale} + 0.5) / {scale}"
 
 
+#: DuckDB twin of Spark's ``unix_timestamp(ts)``: whole epoch seconds,
+#: sub-second parts truncated, so a gap within 1 s of a boundary
+#: classifies the same on both engines.
+DUCK_EPOCH_S = "CAST(epoch(date_trunc('second', ts)) AS BIGINT)"
+
+
 # ---------------------------------------------------------------------------
 # Deterministic transcendentals (round 6, VERDICT r5 item 4).
 #

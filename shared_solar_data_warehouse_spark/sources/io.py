@@ -11,6 +11,7 @@ engine paths (full-data extra pass + nondeterministic typing).
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 
@@ -106,9 +107,14 @@ def scratch_root() -> str:
 
 
 def scratch_dir(sf_dir: str, op_name: str) -> str:
-    """Deterministic per-(sf, op) scratch path for sink/ingest round-trips."""
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = os.path.join(scratch_root(), base, op_name)
+    """Deterministic per-(sf, op) scratch path for sink/ingest
+    round-trips: ``<scratch_root>/<basename>-<hash>/<op>``.  The hash
+    of the absolute snapshot path keeps apart two snapshots that share
+    a basename; the basename keeps the tree readable."""
+    sf_path = os.path.abspath(sf_dir)
+    digest = hashlib.sha1(sf_path.encode()).hexdigest()[:8]
+    key = f"{os.path.basename(sf_path) or 'sf'}-{digest}"
+    path = os.path.join(scratch_root(), key, op_name)
     os.makedirs(path, exist_ok=True)
     return path
 

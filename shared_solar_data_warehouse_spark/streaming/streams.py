@@ -9,11 +9,13 @@ entries are FULLY hash-checked against a batch SQL twin rather than
 merely rows-only (stronger than SURVEY §2.9 planned).
 
 A stream op is a pure function of its snapshot.  The source reads the
-snapshot's events table in place (``events_stream``); every query runs
-to its end through one of two helpers, ``drain`` (memory sink) or
-``_foreach_batch`` (the foreachBatch sinks, whose state fold is
-``_fold_state``); and each foreachBatch op starts from an empty scratch
-dir, so no checkpoint or state outlives the call that made it.
+snapshot's events table in place (``events_stream``), and every query
+starts in one place, ``_run``, which gives it a fresh checkpoint under
+the scratch root and removes it when the query ends or fails.
+``drain`` (memory sink) and the three foreachBatch ops call it; the
+CDC and top-k state fold is ``_fold_state``.  Each foreachBatch op
+starts from an empty scratch dir, so no checkpoint or state outlives
+the call that made it, and no query is ever restarted from one.
 
 The same physical plans run unchanged against a live directory/Kafka
 source with a processing-time trigger — that is the point of the
@@ -27,16 +29,18 @@ import itertools
 import os
 import re
 import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
-from shared_solar_data_warehouse_spark.parity import dsum, sql_dsum
+from shared_solar_data_warehouse_spark.parity import DUCK_EPOCH_S, dsum, sql_dsum
 from shared_solar_data_warehouse_spark.registry import op
 from shared_solar_data_warehouse_spark.session import streaming_session
-from shared_solar_data_warehouse_spark.sources.io import scratch_dir
+from shared_solar_data_warehouse_spark.sources.io import scratch_dir, scratch_root
 
 _COUNTER = itertools.count()
 
@@ -53,8 +57,6 @@ _EVENTS_RAW_SCHEMA = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
-
-_DUCK_EPOCH_S = "CAST(epoch(date_trunc('second', ts)) AS BIGINT)"
 
 
 def events_stream(
@@ -89,49 +91,48 @@ def events_stream(
     return reader.load(os.path.join(root, "{events.parquet}"))
 
 
+def _run(writer: DataStreamWriter) -> None:
+    """Run a stream query to its end (availableNow) — the one place a
+    stream query starts.  Its checkpoint is a fresh dir under the
+    scratch root, removed once the query ends or fails: no op restarts
+    a query, so nothing in it is read again, and Spark's own
+    ``java.io.tmpdir`` checkpoint (left behind by a failed query) is
+    never made."""
+    os.makedirs(scratch_root(), exist_ok=True)
+    ckpt = tempfile.mkdtemp(prefix="ckpt-", dir=scratch_root())
+    try:
+        query = (
+            writer.trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        query.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def drain(sdf: DataFrame, mode: str = "append") -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) into a
     memory sink; return the final result as a batch DataFrame.
 
     The query runs on ``sdf``'s session (``events_stream`` builds it on
     the streaming session).  The sink's temp view is dropped once the
-    result is resolved: the resolved plan keeps the sink's rows, and a
-    listed view would keep them for the life of the session.
+    result is resolved, or once the query fails: the resolved plan
+    keeps the sink's rows, and a listed view would keep them for the
+    life of the session.
     """
     name = f"sswh_mem_{os.getpid()}_{next(_COUNTER)}"
-    query = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
     session = sdf.sparkSession
-    result = session.table(name)
-    session.catalog.dropTempView(name)
-    return result
-
-
-def _foreach_batch(
-    sdf: DataFrame, base: str, fn: Callable[[DataFrame, int], None]
-) -> None:
-    """Run a streaming DataFrame to completion (availableNow), handing
-    each micro-batch to ``fn(batch_df, epoch_id)``; the checkpoint is
-    ``<base>/_ckpt``, so a restart on the same ``base`` resumes it."""
-    query = (
-        sdf.writeStream.foreachBatch(fn)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(base, "_ckpt"))
-        .start()
-    )
-    query.awaitTermination()
+    try:
+        _run(sdf.writeStream.format("memory").queryName(name).outputMode(mode))
+        return session.table(name)
+    finally:
+        session.catalog.dropTempView(name)
 
 
 def _empty_scratch(sf_dir: str, name: str) -> str:
     """The op's scratch dir, emptied: a foreachBatch op keeps no
-    checkpoint or state from an earlier call (a kept checkpoint skips
-    every source file it has seen, even one rewritten in place)."""
+    output or state from an earlier call."""
     base = scratch_dir(sf_dir, name)
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base)
@@ -210,9 +211,9 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_session",
     oracle=f"""
     WITH flagged AS (
-        SELECT user_id, value, {_DUCK_EPOCH_S} AS es,
-               CASE WHEN {_DUCK_EPOCH_S} - lag({_DUCK_EPOCH_S}) OVER w > 1800
-                    OR lag({_DUCK_EPOCH_S}) OVER w IS NULL
+        SELECT user_id, value, {DUCK_EPOCH_S} AS es,
+               CASE WHEN {DUCK_EPOCH_S} - lag({DUCK_EPOCH_S}) OVER w > 1800
+                    OR lag({DUCK_EPOCH_S}) OVER w IS NULL
                     THEN 1 ELSE 0 END AS is_new
         FROM events
         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -309,7 +310,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH gaps AS (
         SELECT user_id,
-               {_DUCK_EPOCH_S} - lag({_DUCK_EPOCH_S}) OVER (
+               {DUCK_EPOCH_S} - lag({DUCK_EPOCH_S}) OVER (
                    PARTITION BY user_id ORDER BY ts, event_id) AS gap_s
         FROM events
     )
@@ -417,9 +418,9 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_stream_join",
     oracle=f"""
     SELECT c.event_id AS click_id, p.event_id AS purchase_id, p.user_id
-    FROM (SELECT *, {_DUCK_EPOCH_S} AS es FROM events
+    FROM (SELECT *, {DUCK_EPOCH_S} AS es FROM events
           WHERE event_type = 'click') c
-    JOIN (SELECT *, {_DUCK_EPOCH_S} AS es FROM events
+    JOIN (SELECT *, {DUCK_EPOCH_S} AS es FROM events
           WHERE event_type = 'purchase') p
       ON c.user_id = p.user_id
      AND p.es >= c.es AND p.es <= c.es + 3600
@@ -489,9 +490,9 @@ def stream_sink_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = events_stream(spark, sf_dir).filter(F.col("value") > 50.0).select(
         "event_id", "event_type"
     )
-    _foreach_batch(s, out_dir, land)
+    _run(s.writeStream.foreachBatch(land))
     # Partition discovery adds an ``epoch`` column, which the aggregate
-    # ignores; ``_ckpt`` is skipped for its leading underscore.
+    # ignores.
     landed = spark.read.parquet(out_dir)
     return landed.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
 
@@ -596,91 +597,28 @@ def stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _recover_state_swap(base: str) -> str:
-    """Crash-recovery preamble for the write-new-then-swap foreachBatch
-    state dirs (``_fold_state``).
-
-    The swap protocol is: write ``state_epoch_{e}`` (with an ``_epoch``
-    stamp inside), ``rename(current -> current.old)``,
-    ``rename(state_epoch_{e} -> current)``, ``rmtree(current.old)``.
-    A crash can land in two inconsistent-looking windows; both recover
-    to a CONSISTENT snapshot (pre- or post-batch, never torn):
-
-    - ``current`` missing + ``current.old`` present — crashed between
-      the two renames.  Roll back to the pre-batch snapshot; the
-      uncommitted epoch replays and re-folds it.
-    - both present — crashed after the commit rename, before cleanup.
-      ``current`` is the committed post-batch snapshot; drop the
-      leftover (also unblocks the next epoch's ``rename(cur -> old)``,
-      which would refuse a non-empty destination on POSIX).
-
-    Returns the ``current`` path.
-    """
-    cur = os.path.join(base, "current")
-    old = cur + ".old"
-    if not os.path.exists(cur) and os.path.exists(old):
-        os.rename(old, cur)
-    elif os.path.exists(old):
-        shutil.rmtree(old, ignore_errors=True)
-    return cur
-
-
-def _state_epoch(cur: str) -> int:
-    """Last epoch folded into the ``current`` snapshot (-1 if none).
-    foreachBatch is at-least-once: a crash after the commit rename but
-    before the checkpoint commit replays the epoch, and a non-idempotent
-    fold (the CDC op's ``sum(n_ops)``) would double-count it — the
-    stamp travels INSIDE the staged dir so it becomes visible atomically
-    with the data at the commit rename."""
-    try:
-        with open(os.path.join(cur, "_epoch")) as fh:
-            return int(fh.read().strip())
-    except (OSError, ValueError):
-        return -1
-
-
-def _commit_state_swap(base: str, nxt: str, epoch_id: int) -> None:
-    """Atomically promote staged state dir ``nxt`` to ``current``:
-    stamp the epoch inside ``nxt`` (Spark ignores ``_``-prefixed files,
-    like ``_SUCCESS``), then swap via the two-rename protocol whose
-    crash windows ``_recover_state_swap`` repairs."""
-    with open(os.path.join(nxt, "_epoch"), "w") as fh:
-        fh.write(str(epoch_id))
-    cur = os.path.join(base, "current")
-    old = cur + ".old"
-    if os.path.exists(cur):
-        os.rename(cur, old)
-    os.rename(nxt, cur)
-    shutil.rmtree(old, ignore_errors=True)
-
-
 def _fold_state(
     sdf: DataFrame, base: str, merge: Callable[[DataFrame], DataFrame]
 ) -> DataFrame:
-    """Fold a stream into a parquet state dir ``<base>/current`` and
-    return the final state.  Each micro-batch is reduced by ``merge``,
-    merged with the previous state by ``merge`` again, written as
-    ``state_epoch_{e}`` and promoted by ``_commit_state_swap``; the
-    fold first repairs a torn swap (``_recover_state_swap``) and skips
-    an epoch already committed (``_state_epoch``), so a replayed epoch
-    is never folded twice.  ``base`` is not emptied here: a restart on
-    the same ``base`` resumes its checkpoint and state."""
-    cur = os.path.join(base, "current")
+    """Fold a stream into parquet state under the empty dir ``base``
+    and return the final state.  Epoch ``e`` reduces its micro-batch by
+    ``merge``, merges that with the previous epoch's state by ``merge``
+    again, and writes ``<base>/state_<e>``; the op reads back the last
+    state written.  The query never restarts (``_run``), so no epoch
+    is replayed and no earlier state is read after a fault."""
+    written: list[str] = []
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        _recover_state_swap(base)
-        if _state_epoch(cur) >= epoch_id:
-            return
         b = merge(batch_df)
-        if os.path.exists(cur):
-            prev = batch_df.sparkSession.read.parquet(cur)
+        if written:
+            prev = batch_df.sparkSession.read.parquet(written[-1])
             b = merge(prev.unionByName(b))
-        nxt = os.path.join(base, f"state_epoch_{epoch_id}")
-        b.write.mode("overwrite").parquet(nxt)
-        _commit_state_swap(base, nxt, epoch_id)
+        path = os.path.join(base, f"state_{epoch_id}")
+        b.write.mode("overwrite").parquet(path)
+        written.append(path)
 
-    _foreach_batch(sdf, base, fold)
-    return sdf.sparkSession.read.parquet(cur)
+    _run(sdf.writeStream.foreachBatch(fold))
+    return sdf.sparkSession.read.parquet(written[-1])
 
 
 def _cdc_latest(df: DataFrame) -> DataFrame:
@@ -726,15 +664,15 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch — the streaming MERGE idiom every lakehouse CDC
     pipeline runs.  Each micro-batch reduces map-side to one winner
     per key (argmax on the (ts, event_id) total order, plus an op
-    count), merges with the persisted state by the same argmax, and
-    overwrites the state atomically (write-new-then-swap, idempotent
-    per epoch).  Because every upsert carries the full row, replaying
-    the whole feed folds to exactly "latest op per key, tombstones
-    absent" — which is what the oracle states declaratively.  At
-    100 TB the state table is key-cardinality (not feed-cardinality)
-    and the per-batch merge shuffles only batch-keys ∪ state-keys; a
-    real deployment would swap the parquet swap-dir for Delta/Iceberg
-    MERGE INTO, same plan shape."""
+    count), merges with the previous epoch's state by the same argmax,
+    and writes the merged state as a new parquet dir (``_fold_state``).
+    Because every upsert carries the full row, replaying the whole feed
+    folds to exactly "latest op per key, tombstones absent" — which is
+    what the oracle states declaratively.  At 100 TB the state table is
+    key-cardinality (not feed-cardinality) and the per-batch merge
+    shuffles only batch-keys ∪ state-keys; a real deployment would swap
+    the per-epoch parquet dirs for Delta/Iceberg MERGE INTO, same plan
+    shape."""
     feed = events_stream(spark, sf_dir).select(
         "user_id",
         F.unix_micros("ts").alias("us"),
@@ -771,12 +709,9 @@ def stream_topk_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaderboard, and keeps the combined top-10 — O(k) state however
     long the stream runs, the monoid-fold shape every streaming top-k
     runs (per-batch partial top-k is associative and commutative, so
-    batch ARRIVAL order cannot change the answer; RE-DELIVERED epochs
-    would double-count and are fenced by the _epoch stamp instead —
-    the fold itself is not replay-idempotent).  State lands through
-    ``_fold_state``, the same atomic write-new-then-swap parquet dir as
-    the CDC op; the oracle is the batch LIMIT with the identical
-    tie-break."""
+    batch ARRIVAL order cannot change the answer).  State lands through
+    ``_fold_state``, the same per-epoch parquet dirs as the CDC op; the
+    oracle is the batch LIMIT with the identical tie-break."""
     s = events_stream(spark, sf_dir).select("event_id", "value")
     base = _empty_scratch(sf_dir, "stream_topk_snapshot")
     state = _fold_state(s, base, _top10)

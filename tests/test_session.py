@@ -104,7 +104,11 @@ def test_scratch_dir_roots_at_the_temp_dir(monkeypatch, tmp_path):
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     path = scratch_dir("/data/sf0.001/", "sink_csv")
+    key = os.path.basename(os.path.dirname(path))
     assert path == os.path.join(
-        str(tmp_path), "sswh_spark_scratch", "sf0.001", "sink_csv"
+        str(tmp_path), "sswh_spark_scratch", key, "sink_csv"
     )
+    assert key.startswith("sf0.001-")
     assert os.path.isdir(path)
+    assert scratch_dir("/data/sf0.001", "sink_csv") == path
+    assert scratch_dir("/other/sf0.001", "sink_csv") != path

@@ -54,6 +54,32 @@ def test_rewritten_snapshot_serves_new_data(spark, registry, tmp_path):
         assert fresh != small[n]
 
 
+def test_snapshots_sharing_a_basename_keep_their_scratch_apart(
+    spark, registry, tmp_path
+):
+    """A sink op on a second snapshot with the first's basename must
+    not overwrite the files the first call's DataFrame reads."""
+    from shared_solar_data_warehouse_spark.sources.io import scratch_dir
+
+    snaps = []
+    for parent in ("x", "y"):
+        snap = tmp_path / parent / "snap"
+        snap.mkdir(parents=True)
+        shutil.copyfile(
+            os.path.join(SF_SMALL, "events.parquet"), snap / "events.parquet"
+        )
+        snaps.append(str(snap))
+    scan = registry["scan_json"].builder
+    try:
+        first = scan(spark, snaps[0])
+        scan(spark, snaps[1])
+        want = load_table(spark, SF_SMALL, "events").select(first.columns)
+        assert _rows(first) == _rows(want)
+    finally:
+        for snap in snaps:
+            shutil.rmtree(os.path.dirname(scratch_dir(snap, "scan_json")))
+
+
 def test_views_belong_to_their_session(spark):
     """A new session of the same application has its own temp views;
     a view re-pointed at another snapshot and back follows each move."""

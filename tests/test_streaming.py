@@ -30,8 +30,6 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
 
-REPLAY_BASE = "/tmp/sswh_spark_replay"
-
 #: stream ops that read the events file-stream and carry a DuckDB
 #: oracle (source_rate_stream is the only §2.9 entry excluded: it has
 #: no events source and is rows-only by design).
@@ -105,18 +103,27 @@ def _split_events(dest_sf: str, disorder_minutes: int = 0) -> None:
         os.utime(out, (base_mtime + 60 * k, base_mtime + 60 * k))
 
 
+def _drop_scratch(sf: str) -> None:
+    """Remove the engine's scratch tree for snapshot ``sf``."""
+    from shared_solar_data_warehouse_spark.sources.io import scratch_dir
+
+    shutil.rmtree(os.path.dirname(scratch_dir(sf, "_")), ignore_errors=True)
+
+
 @pytest.fixture(scope="module")
-def replay_ordered_sf():
-    sf = os.path.join(REPLAY_BASE, "sf_replay_ord")
+def replay_ordered_sf(tmp_path_factory):
+    sf = str(tmp_path_factory.mktemp("replay") / "sf_replay_ord")
     _split_events(sf, disorder_minutes=0)
-    return sf
+    yield sf
+    _drop_scratch(sf)
 
 
 @pytest.fixture(scope="module")
-def replay_disordered_sf():
-    sf = os.path.join(REPLAY_BASE, "sf_replay_dis")
+def replay_disordered_sf(tmp_path_factory):
+    sf = str(tmp_path_factory.mktemp("replay") / "sf_replay_dis")
     _split_events(sf, disorder_minutes=25)
-    return sf
+    yield sf
+    _drop_scratch(sf)
 
 
 @pytest.fixture()
@@ -166,7 +173,7 @@ def test_replay_actually_ran_three_batches(spark, registry, replay_ordered_sf,
     assert len(epochs) == 3, epochs
 
 
-def test_watermark_drops_straggler_beyond_bound(spark, registry):
+def test_watermark_drops_straggler_beyond_bound(spark, registry, tmp_path):
     """Pin the DROP semantics the disordered tier deliberately stays
     inside of: move one event >1 h behind the following batch's data;
     after that batch, the watermark passes its day-window end, so
@@ -179,7 +186,7 @@ def test_watermark_drops_straggler_beyond_bound(spark, registry):
 
     from shared_solar_data_warehouse_spark.sources.io import table_path
 
-    sf = os.path.join(REPLAY_BASE, "sf_replay_late")
+    sf = str(tmp_path / "sf_replay_late")
     _split_events(sf, disorder_minutes=0)
     ev_dir = table_path(sf, "events")
     parts = sorted(os.listdir(ev_dir))
@@ -223,7 +230,7 @@ def test_watermark_drops_straggler_beyond_bound(spark, registry):
 
 
 def test_checkpoint_recovery_restores_state_store(spark, registry,
-                                                  replay_ordered_sf):
+                                                  replay_ordered_sf, tmp_path):
     """r7 (VERDICT r6 item 3): checkpoint RECOVERY — the one §2.9
     behavior the availableNow drains cannot exercise.  Run the
     stream_stateful per-user gap state machine over 2 of 3 batches,
@@ -253,11 +260,9 @@ def test_checkpoint_recovery_restores_state_store(spark, registry,
         _EVENTS_RAW_SCHEMA,
     )
 
-    base = os.path.join(REPLAY_BASE, "ckpt_recovery")
-    shutil.rmtree(base, ignore_errors=True)
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
     os.makedirs(src)
     ev_dir = table_path(replay_ordered_sf, "events")
     parts = sorted(os.listdir(ev_dir))
@@ -420,193 +425,6 @@ def test_stream_ewma_matches_batch_twin(spark, registry):
     assert _canon(stream) == _canon(batch)
 
 
-# ---------------------------------------------------------------------------
-# Round 8 (VERDICT r7 item 6): FAILURE INJECTION for the write-new-then-
-# swap foreachBatch state sinks (stream_cdc_apply / stream_topk_snapshot).
-# The swap protocol has two crash windows a drain can never exercise:
-#   (P2) between rename(current -> current.old) and
-#        rename(state_epoch_e -> current)  — state looks GONE;
-#   (P3) after the commit rename but before Spark commits the epoch to
-#        the checkpoint — foreachBatch is at-least-once, so the epoch
-#        REPLAYS and a non-idempotent fold (sum(n_ops)) double-counts.
-# _recover_state_swap + the _epoch stamp (streams.py) repair both; these
-# tests interrupt a live query at each point, restart from the same
-# checkpoint, and assert the sink recovers to a consistent snapshot —
-# pre- or post-batch, never torn, never double-counted.
-
-
-def _cdc_batch_oracle(spark, src: str):
-    """Exact batch twin over all replayed rows: latest op per key with a
-    total op count, tombstones (event_type='error') absent."""
-    from shared_solar_data_warehouse_spark.streaming.streams import (
-        _EVENTS_RAW_SCHEMA,
-    )
-
-    ev = spark.read.schema(_EVENTS_RAW_SCHEMA).parquet(src)
-    return (
-        ev.groupBy("user_id")
-        .agg(
-            F.max(
-                F.struct(
-                    F.unix_micros("ts").alias("us"), "event_id",
-                    "event_type", "value",
-                )
-            ).alias("last"),
-            F.count(F.lit(1)).cast("long").alias("n_ops"),
-        )
-        .filter(F.col("last.event_type") != "error")
-        .select(
-            "user_id",
-            F.col("last.us").alias("us"),
-            F.col("last.event_id").alias("event_id"),
-            F.col("last.value").alias("value"),
-            "n_ops",
-        )
-    )
-
-
-@pytest.mark.parametrize("kind", ["torn_swap", "post_commit"])
-def test_swap_sink_crash_injection_recovers_consistent(
-    spark, replay_ordered_sf, three_batch_mode, monkeypatch, kind
-):
-    """Drive the op's own fold (``_fold_state`` with ``_cdc_latest``,
-    stream_cdc_apply's merge) over the 3-batch replay, crash it while
-    committing the SECOND batch — so real pre-crash state exists and a
-    post-crash batch still follows — and restart it on the same base."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from shared_solar_data_warehouse_spark.sources.io import table_path
-    from shared_solar_data_warehouse_spark.streaming import streams
-
-    base = os.path.join(REPLAY_BASE, f"swap_fault_{kind}")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
-    src = table_path(replay_ordered_sf, "events")
-    feed = streams.events_stream(spark, replay_ordered_sf).select(
-        "user_id",
-        F.unix_micros("ts").alias("us"),
-        "event_id",
-        "event_type",
-        "value",
-        F.lit(1).alias("n_ops"),
-    )
-    commit = streams._commit_state_swap
-
-    def faulty(base_, nxt, epoch_id):
-        if epoch_id != 1:
-            return commit(base_, nxt, epoch_id)
-        if kind == "torn_swap":
-            # crash BETWEEN the two renames: perform only the first.
-            with open(os.path.join(nxt, "_epoch"), "w") as fh:
-                fh.write(str(epoch_id))
-            cur = os.path.join(base_, "current")
-            if os.path.exists(cur):
-                os.rename(cur, cur + ".old")
-            raise RuntimeError("injected crash between state renames")
-        # crash AFTER the swap but BEFORE the checkpoint commit: Spark
-        # replays this epoch on restart (at-least-once).
-        commit(base_, nxt, epoch_id)
-        raise RuntimeError("injected crash after state commit")
-
-    with monkeypatch.context() as m:
-        m.setattr(streams, "_commit_state_swap", faulty)
-        with pytest.raises(StreamingQueryException):
-            streams._fold_state(feed, base, streams._cdc_latest)
-
-    cur = os.path.join(base, "current")
-    old = cur + ".old"
-    if kind == "torn_swap":
-        # The crash left the torn window the old protocol could not
-        # survive: no current snapshot at all.
-        assert not os.path.exists(cur) and os.path.exists(old)
-    else:
-        # Post-commit crash: current IS the committed epoch-1 snapshot.
-        assert os.path.exists(cur)
-        epoch_file = os.path.join(cur, "_epoch")
-        assert open(epoch_file).read().strip() == "1"
-
-    # Restart on the SAME base (its checkpoint and state) with the real
-    # commit: the interrupted epoch replays (at-least-once), recovery
-    # repairs the torn swap / the _epoch stamp suppresses the
-    # double-fold, and the remaining batch drains.
-    state = streams._fold_state(feed, base, streams._cdc_latest)
-    assert os.path.exists(cur) and not os.path.exists(old)
-
-    got = state.filter(F.col("event_type") != "error").select(
-        "user_id", "us", "event_id", "value", "n_ops"
-    )
-    want = _cdc_batch_oracle(spark, src)
-    # Exact parity INCLUDING n_ops: a replayed epoch folded twice would
-    # inflate n_ops for every batch-0/1 key; a torn swap left unrepaired
-    # would lose every key absent from batches 1-2.
-    assert _canon(got) == _canon(want)
-
-
-def test_swap_helpers_all_crash_prefixes(tmp_path):
-    """Pure-filesystem sweep of the swap protocol's crash prefixes —
-    including the one the live injections above cannot leave behind:
-    a crash AFTER the commit rename but BEFORE the old-state cleanup
-    (both `current` and `current.old` on disk).  Recovery must keep
-    the committed post-batch snapshot, drop the leftover, and report
-    the epoch as applied."""
-    from shared_solar_data_warehouse_spark.streaming.streams import (
-        _commit_state_swap,
-        _recover_state_swap,
-        _state_epoch,
-    )
-
-    def mkstate(d, tag, epoch=None):
-        os.makedirs(d)
-        with open(os.path.join(d, "part-00000"), "w") as fh:
-            fh.write(tag)
-        if epoch is not None:
-            with open(os.path.join(d, "_epoch"), "w") as fh:
-                fh.write(str(epoch))
-
-    def tag(d):
-        with open(os.path.join(d, "part-00000")) as fh:
-            return fh.read()
-
-    # clean commit over an existing snapshot: post-batch wins, no .old
-    base = str(tmp_path / "clean")
-    os.makedirs(base)
-    cur = os.path.join(base, "current")
-    mkstate(cur, "epoch0", epoch=0)
-    nxt = os.path.join(base, "state_epoch_1")
-    mkstate(nxt, "epoch1")
-    _commit_state_swap(base, nxt, 1)
-    assert tag(cur) == "epoch1" and _state_epoch(cur) == 1
-    assert not os.path.exists(cur + ".old") and not os.path.exists(nxt)
-
-    # crash between the renames: cur gone, old present -> roll back to
-    # the PRE-batch snapshot; epoch reads stale so the fold replays
-    base = str(tmp_path / "torn")
-    os.makedirs(base)
-    cur = os.path.join(base, "current")
-    mkstate(cur + ".old", "epoch0", epoch=0)
-    mkstate(os.path.join(base, "state_epoch_1"), "epoch1", epoch=1)
-    assert _recover_state_swap(base) == cur
-    assert tag(cur) == "epoch0" and _state_epoch(cur) == 0
-    assert not os.path.exists(cur + ".old")
-
-    # crash after the commit rename, before cleanup: cur AND old both
-    # present -> keep the committed POST-batch snapshot, drop old
-    base = str(tmp_path / "postswap")
-    os.makedirs(base)
-    cur = os.path.join(base, "current")
-    mkstate(cur, "epoch1", epoch=1)
-    mkstate(cur + ".old", "epoch0", epoch=0)
-    _recover_state_swap(base)
-    assert tag(cur) == "epoch1" and _state_epoch(cur) == 1
-    assert not os.path.exists(cur + ".old")
-
-    # fresh dir (first epoch, nothing on disk): no-op, epoch -1
-    base = str(tmp_path / "fresh")
-    os.makedirs(base)
-    cur = _recover_state_swap(base)
-    assert not os.path.exists(cur) and _state_epoch(cur) == -1
-
-
 def _stage_snapshot(root, n_rows: int | None = None) -> str:
     """A snapshot dir: the fixture's other tables linked in, and an
     events FILE holding the fixture's events (or their first
@@ -639,24 +457,23 @@ def _sink_passes(spark, registry, snap: str) -> None:
 
 
 def test_reused_basename_streams_the_second_snapshot(spark, registry, tmp_path):
-    """Two snapshots with one basename under different parents share a
-    scratch dir; streams on the second read ITS events, not the
-    first's — through a drain and through the foreachBatch sink."""
-    from shared_solar_data_warehouse_spark.sources.io import scratch_root
+    """Two snapshots with one basename under different parents: streams
+    on the second read ITS events, not the first's — through a drain
+    and through the foreachBatch sink."""
     from shared_solar_data_warehouse_spark.streaming.streams import (
         drain,
         events_stream,
     )
 
-    base = f"sswh_stream_reuse_{os.getpid()}"
-    first = _stage_snapshot(tmp_path / "a" / base)
-    second = _stage_snapshot(tmp_path / "b" / base, n_rows=100)
+    first = _stage_snapshot(tmp_path / "a" / "snap")
+    second = _stage_snapshot(tmp_path / "b" / "snap", n_rows=100)
     try:
         _sink_passes(spark, registry, first)
         _sink_passes(spark, registry, second)
         assert drain(events_stream(spark, second)).count() == 100
     finally:
-        shutil.rmtree(os.path.join(scratch_root(), base), ignore_errors=True)
+        _drop_scratch(first)
+        _drop_scratch(second)
 
 
 def test_stream_source_escapes_glob_characters(spark, tmp_path):
@@ -681,16 +498,13 @@ def test_sink_foreachbatch_sees_events_rewritten_in_place(
     """A snapshot's events file rewritten in place is a new source: the
     foreachBatch sink must land and count the new rows, not skip the
     path as already seen by an earlier call's checkpoint."""
-    from shared_solar_data_warehouse_spark.sources.io import scratch_root
-
-    base = f"sswh_stream_rewrite_{os.getpid()}"
-    snap = _stage_snapshot(tmp_path / base)
+    snap = _stage_snapshot(tmp_path / "snap")
     try:
         _sink_passes(spark, registry, snap)
         _write_events(snap, 100)
         _sink_passes(spark, registry, snap)
     finally:
-        shutil.rmtree(os.path.join(scratch_root(), base), ignore_errors=True)
+        _drop_scratch(snap)
 
 
 def test_drains_never_change_caller_session_confs(spark, registry):
@@ -787,3 +601,33 @@ def test_drain_drops_its_memory_sink_view(spark):
     ]
     assert views == []
     assert len(result.collect()) == result.count() > 0
+
+
+def test_failed_drain_leaves_no_checkpoint(spark):
+    """A drain whose query fails leaves nothing behind: no checkpoint
+    under the JVM's ``java.io.tmpdir`` (where Spark puts a memory
+    sink's checkpoint when it is given none) or the scratch root, and
+    no memory-sink view."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from shared_solar_data_warehouse_spark.session import streaming_session
+    from shared_solar_data_warehouse_spark.sources.io import scratch_root
+    from shared_solar_data_warehouse_spark.streaming.streams import (
+        drain,
+        events_stream,
+    )
+
+    jvm_tmp = spark._jvm.System.getProperty("java.io.tmpdir")
+    os.makedirs(scratch_root(), exist_ok=True)
+
+    def left() -> tuple:
+        spark_ckpts = {n for n in os.listdir(jvm_tmp) if n.startswith("temporary-")}
+        return spark_ckpts, set(os.listdir(scratch_root()))
+
+    before = left()
+    failing = events_stream(spark, SF_SMALL).select(F.raise_error(F.lit("boom")))
+    with pytest.raises(StreamingQueryException, match="boom"):
+        drain(failing)
+    assert left() == before
+    views = streaming_session(spark, SF_SMALL).catalog.listTables()
+    assert not [t.name for t in views if t.name.startswith("sswh_mem_")]
